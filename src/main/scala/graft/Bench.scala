@@ -22,14 +22,10 @@ object Bench {
   private def materialize(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
-  /** tmpfs scratch when available (local bench boxes), else /tmp —
-    * per-process so concurrent Verify/Bench/test JVMs can't collide.
+  /** Shuffle/spill scratch under [[Scratch.parent]] — per-process so
+    * concurrent Verify/Bench/test JVMs can't collide.
     */
-  private[graft] def scratchDir(): String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) Scratch.dir("/dev/shm", "graft_spark")
-    else Scratch.dir(sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_spark")
-  }
+  private[graft] def scratchDir(): String = Scratch.dir(Scratch.parent, "graft_spark")
 
   /** Per-query medians of a PRIOR bench artifact, parsed from its
     * `"queries":{...}` object (files written by this program, so the

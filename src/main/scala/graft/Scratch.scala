@@ -30,6 +30,17 @@ object Scratch {
       }
   }
 
+  /** The parent of every scratch directory: tmpfs (`/dev/shm`) when it
+    * is writable, else `java.io.tmpdir`. Shared-host disk stalls on /tmp
+    * billed random multi-second spikes to shuffle-heavy and
+    * store-writing queries; tmpfs avoids them.
+    */
+  def parent: String = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) "/dev/shm"
+    else sys.props.getOrElse("java.io.tmpdir", "/tmp")
+  }
+
   /** `<parent>/<prefix>_<ownPid>`, created, with dead siblings reaped. */
   def dir(parent: String, prefix: String): String = {
     try reapDead(parent, prefix) catch { case _: Exception => () }

@@ -289,107 +289,6 @@ case class Int8DotProduct(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Dense matrix x vector product for the OPQ rotation hot path: `mat` is
-  * a ROW-MAJOR flattened `array<double>` of a (dimOut x dimIn) matrix
-  * (in practice a FOLDABLE literal — the learned rotation is driver-sized
-  * and rides the plan, no broadcast join), `vec` an `array<float|double>`
-  * embedding; output element i = sum_j mat[i*dimIn + j] * vec[j], each
-  * row accumulated in ascending-j double precision (the [[FloatDotProduct]]
-  * determinism contract, so a SQL oracle can replay it bit-identically).
-  *
-  * Why an Expression: the `transform(sequence(...), aggregate(...))` HOF
-  * formulation is interpreted per element (dimOut x dimIn boxed lambda
-  * dispatches per row); unrolling to dim x dim literal arithmetic blows
-  * past the 64 KB codegen method limit at dim=64. This stays one tight
-  * generated loop.
-  */
-case class MatVecMul(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val matOk = left.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    val vecOk = right.dataType match {
-      case ArrayType(FloatType | DoubleType, _) => true
-      case _ => false
-    }
-    if (matOk && vecOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_matvec expects (array<double> row-major matrix, " +
-        s"array<float>|array<double> vector), got " +
-        s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_matvec"
-
-  private def vecIsFloat: Boolean = right.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val m = a.asInstanceOf[ArrayData]
-    val x = b.asInstanceOf[ArrayData]
-    val dimIn = x.numElements()
-    require(dimIn > 0 && m.numElements() % dimIn == 0,
-      s"graft_matvec: matrix length ${m.numElements()} not a multiple " +
-        s"of vector length $dimIn")
-    val dimOut = m.numElements() / dimIn
-    val out = new Array[Double](dimOut)
-    var i = 0
-    while (i < dimOut) {
-      var s = 0.0
-      var j = 0
-      while (j < dimIn) {
-        val xv = if (x.isNullAt(j)) 0.0
-          else if (vecIsFloat) x.getFloat(j).toDouble else x.getDouble(j)
-        s += m.getDouble(i * dimIn + j) * xv
-        j += 1
-      }
-      out(i) = s
-      i += 1
-    }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val dimIn = ctx.freshName("mvDimIn")
-      val dimOut = ctx.freshName("mvDimOut")
-      val out = ctx.freshName("mvOut")
-      val i = ctx.freshName("mvI")
-      val j = ctx.freshName("mvJ")
-      val acc = ctx.freshName("mvAcc")
-      val getX =
-        if (vecIsFloat) s"(double) $b.getFloat($j)" else s"$b.getDouble($j)"
-      s"""
-         |int $dimIn = $b.numElements();
-         |if ($dimIn == 0 || $a.numElements() % $dimIn != 0) {
-         |  throw new IllegalArgumentException("graft_matvec: matrix length "
-         |    + $a.numElements() + " not a multiple of vector length " + $dimIn);
-         |}
-         |int $dimOut = $a.numElements() / $dimIn;
-         |double[] $out = new double[$dimOut];
-         |for (int $i = 0; $i < $dimOut; $i++) {
-         |  double $acc = 0.0;
-         |  for (int $j = 0; $j < $dimIn; $j++) {
-         |    $acc += $a.getDouble($i * $dimIn + $j) *
-         |      ($b.isNullAt($j) ? 0.0 : $getX);
-         |  }
-         |  $out[$i] = $acc;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): MatVecMul =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Registration for the graft native functions — either imperatively
   * ([[GraftFunctions.register]], idempotent, used by the operators
   * themselves) or declaratively via `spark.sql.extensions=
@@ -419,9 +318,6 @@ object GraftFunctions {
 
   val i8dotInfo = new ExpressionInfo(
     classOf[Int8DotProduct].getName, "graft_i8dot")
-
-  val matvecInfo = new ExpressionInfo(
-    classOf[MatVecMul].getName, "graft_matvec")
 
   val bpeTokensInfo = new ExpressionInfo(
     classOf[BpeTokenCount].getName, "graft_bpe_tokens")
@@ -530,8 +426,6 @@ object GraftFunctions {
       exprs => Q8Quantize(exprs.head, exprs(1)))
     regIfAbsent(spark, "graft_i8dot")(
       exprs => Int8DotProduct(exprs.head, exprs(1)))
-    regIfAbsent(spark, "graft_matvec")(
-      exprs => MatVecMul(exprs.head, exprs(1)))
     regIfAbsent(spark, "graft_bpe_tokens")(bpeTokensBuilder)
     regIfAbsent(spark, "graft_bpe_merge")(bpeMergeBuilder)
     regIfAbsent(spark, "graft_jaro_winkler")(
@@ -570,9 +464,6 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
     ext.injectFunction((FunctionIdentifier("graft_i8dot"),
       GraftFunctions.i8dotInfo,
       exprs => Int8DotProduct(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_matvec"),
-      GraftFunctions.matvecInfo,
-      exprs => MatVecMul(exprs.head, exprs(1))))
     ext.injectFunction((FunctionIdentifier("graft_bpe_tokens"),
       GraftFunctions.bpeTokensInfo,
       GraftFunctions.bpeTokensBuilder))

@@ -154,7 +154,7 @@ object Aggregations {
     // the cut also stops a double evaluation of the corpus shuffle
     val perX = nn.groupBy(keys.map(col): _*)
       .agg(min(col(yCol)).as("__miny"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Materialize.writeOnce)
     // cheap-path dispatch (r18 verdict task 6): the distributed frontier
     // scan exists for continuous x and hot groups; when the WHOLE
     // distinct-(group, x) aggregate is tiny, the per-group window is
@@ -178,7 +178,7 @@ object Aggregations {
         // reclaimed by the ContextCleaner once the plan is dropped
         val fronts = runningMins(perX, groupCols, xCol)
           .select((keys.map(col) :+ col("__rm_le") :+ col("__rm_lt")): _*)
-          .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+          .transform(Materialize.writeOnce)
         // forced broadcast only on the UNGROUPED face, where a frontier
         // row is exactly (x, 2 mins) and the row guard sizes it honestly;
         // the grouped frontier also carries arbitrary-width group keys,

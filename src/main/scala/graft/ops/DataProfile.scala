@@ -297,8 +297,7 @@ object DataProfile {
                   maxKeyN: Long = 1L << 32): DataFrame = {
     val counts = df.filter(col(keyCol).isNotNull)
       .groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("kn"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    counts.count()
+      .transform(Materialize.sharedNow)
     val base = counts.agg(sum(col("kn")).as("n_rows"),
       count(lit(1)).as("n_keys"), max(col("kn")).as("max_key_n"))
     val topKey = counts

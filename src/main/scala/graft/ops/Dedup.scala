@@ -24,14 +24,9 @@ import org.apache.spark.sql.types.StringType
   * reproducible across engines (the DuckDB oracles in
   * [[graft.queries.LlmQueries]] replay the identical computation).
   *
-  * Resource contract: the pair operators persist small sketch relations
-  * (MEMORY_AND_DISK, deserialized: SQL-cache blocks are already compact
-  * columnar CachedBatches — the r21 _SER experiment measured a 5x wall
-  * regression on the containment family from the added per-read
-  * serialization, see OPTIMIZATION_r21.md) to prevent recomputation
-  * races across join sides.
-  * They are NOT unpersisted here (the returned plans still reference
-  * them); consume the result, then release with
+  * Resource contract: storage follows [[Materialize]]. The pair
+  * operators persist small sketch relations as shared inputs that the
+  * returned plans still read, so they are released by the caller's
   * `spark.catalog.clearCache()` — as Verify/Bench do per query.
   */
 object Dedup {
@@ -541,8 +536,7 @@ object Dedup {
     // audit always needed; the cool path's empty checkpoint frees via
     // the ContextCleaner as soon as this returns None.
     val hot = counted.filter(col("__bsz") > cap)
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Materialize.writeOnce)
     val audit = hot
       .agg(count(lit(1)).as("__n"), sum("__bsz").as("__dropped")).collect()(0)
     val n = audit.getAs[Long]("__n")
@@ -617,12 +611,7 @@ object Dedup {
     // scan->shingle->sketch pipeline per join side (broadcast joins have
     // no common exchange for ReuseExchange to dedup).
     val banded = bandRelation(df, idCol, numHashes, bands, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Materialize ONCE, serially, before the join: its two sides (stream +
-    // broadcast thread) would otherwise race to compute the same cache
-    // blocks concurrently — observed as multi-10x nondeterministic stalls
-    // on block locks.
-    banded.count()
+      .transform(Materialize.sharedNow)
     val pruned = capBuckets(banded, Seq("band", "sig"), maxBucketSize,
       "lshCandidatePairs")
     val a = pruned.as("a")
@@ -650,22 +639,20 @@ object Dedup {
                                idCol: String, numHashes: Int, bands: Int,
                                textCol: String = "text", k: Int = 3,
                                maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bOld = bandRelation(corpus, idCol, numHashes, bands, textCol, k).persist(sl)
-    bOld.count() // serial materialization — see lshCandidatePairs
-    val bNew = bandRelation(batch, idCol, numHashes, bands, textCol, k).persist(sl)
-    bNew.count()
+    val bOld = Materialize.sharedNow(
+      bandRelation(corpus, idCol, numHashes, bands, textCol, k))
+    val bNew = Materialize.sharedNow(
+      bandRelation(batch, idCol, numHashes, bands, textCol, k))
     // Eagerly materialize the (small, candidate-sized) result with a
     // lineage cut, then RELEASE the band-relation caches: this is the
     // per-ingest production path, so leaving bOld/bNew pinned would
     // accumulate cache-manager entries across every ingest of a session.
     // Checkpointed blocks self-free via the ContextCleaner when the
     // returned plan is collected — same rationale as resolveClusters.
-    val result = incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    bOld.unpersist()
-    bNew.unpersist()
-    result
+    Materialize.withPersisted(bOld, bNew) {
+      Materialize.writeOnce(
+        incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize))
+    }
   }
 
   /** [[incrementalLshCandidates]] over PREBUILT band relations
@@ -709,8 +696,7 @@ object Dedup {
     // Both relations here are candidate-sized (small by construction) and
     // referenced 2-3 times each — persist so the upstream LSH pipeline and
     // the semi-joined shingle array build run once, not per reference.
-    val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cand.count() // serial materialization — see lshCandidatePairs
+    val cand = Materialize.sharedNow(candidates)
     val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cid"))
       .distinct()
     val needed = docs.join(candIds, col(idCol) === col("cid"), "left_semi")
@@ -719,8 +705,7 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("s"))).as("ws"))
       .withColumn("c", size(col("ws")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    arr.count() // serial materialization before the 2 dependent joins
+      .transform(Materialize.sharedNow)
     val withArrays = cand
       .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
         col("c").as("ca")), Seq("doc_a"))
@@ -820,8 +805,7 @@ object Dedup {
   def containmentPairs(docs: DataFrame, candidates: DataFrame, idCol: String,
                        k: Int, threshold: Double,
                        textCol: String = "text"): DataFrame = {
-    val cand = candidates.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cand.count() // serial materialization — see lshCandidatePairs
+    val cand = Materialize.sharedNow(candidates)
     val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cid"))
       .distinct()
     val needed = docs.join(candIds, col(idCol) === col("cid"), "left_semi")
@@ -838,8 +822,7 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("s"))).as("ws"))
       .withColumn("c", size(col("ws")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    arr.count()
+      .transform(Materialize.sharedNow)
     val withArrays = cand
       .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
         col("c").as("ca")), Seq("doc_a"))
@@ -866,9 +849,7 @@ object Dedup {
     */
   def containmentPairsFrom(docTokens: DataFrame, candidates: DataFrame,
                            threshold: Double): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val cand = candidates.persist(sl)
-    cand.count() // serial materialization — see lshCandidatePairs
+    val cand = Materialize.sharedNow(candidates)
     val candIds = cand.select(explode(array(col("doc_a"), col("doc_b"))).as("cid"))
       .distinct()
     // ts is (df, w)-sorted for the prefix lemma; the verify re-sorts the
@@ -881,8 +862,7 @@ object Dedup {
       .select(col("doc_id"),
         sort_array(transform(col("ts"), x => x.getField("w"))).as("ws"),
         col("s").as("c"))
-      .persist(sl)
-    arr.count()
+      .transform(Materialize.sharedNow)
     val withArrays = cand
       .join(arr.select(col("doc_id").as("doc_a"), col("ws").as("wa"),
         col("c").as("ca")), Seq("doc_a"))
@@ -920,8 +900,7 @@ object Dedup {
     * `docs_affected` is an UPPER BOUND on the recall exposure, not the
     * exact loss — a doc in one hot bucket can still be detected through
     * a non-hot bucket in another band; the exact missed-pair count
-    * (all-witnesses-hot) is what `ScaleProbe publish_cap_audit`
-    * measures, and it is always <= this column's implication. The
+    * (all-witnesses-hot) is always <= this column's implication. The
     * [[capBuckets]] stderr line reports drops at run time; this is the
     * same information as a RELATION, so a deployment can record the
     * cap's recall exposure next to its ladder rungs (the
@@ -935,32 +914,28 @@ object Dedup {
                   bands: Int, cap: Int, textCol: String = "text",
                   k: Int = 3): DataFrame = {
     require(cap > 0, s"lshCapAudit needs a positive cap, got $cap")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val banded = bandIndex(docs, idCol, numHashes, bands, textCol, k)
-      .persist(sl)
-    banded.count() // serial materialization — see lshCandidatePairs
+      .transform(Materialize.sharedNow)
     val sizes = banded.groupBy(col("band"), col("sig"))
-      .agg(count(lit(1)).as("bsz")).persist(sl)
-    sizes.count()
-    val hot = sizes.filter(col("bsz") > cap)
-    // documents losing detection: members of ANY hot bucket (the hot
-    // set is bounded by corpus/cap rows; the join is sketch-sized and
-    // AQE picks the strategy — no forced broadcast, the audit must
-    // stay safe at any scale)
-    val hotDocs = banded.join(hot.select(col("band"), col("sig")),
-        Seq("band", "sig"), "left_semi")
-      .select(col("doc_id")).distinct()
-    val out = sizes.agg(count(lit(1)).as("n_buckets"))
-      .crossJoin(hot.agg(count(lit(1)).as("n_hot_buckets"),
-        coalesce(sum(col("bsz")), lit(0L)).as("band_rows_dropped")))
-      .crossJoin(hotDocs.agg(count(lit(1)).as("docs_affected")))
-      .select(lit(cap).as("cap"), col("n_buckets"),
-        col("n_hot_buckets"), col("band_rows_dropped"),
-        col("docs_affected"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // eager: release the persists below safely
-    banded.unpersist()
-    sizes.unpersist()
-    out
+      .agg(count(lit(1)).as("bsz")).transform(Materialize.sharedNow)
+    Materialize.withPersisted(banded, sizes) {
+      val hot = sizes.filter(col("bsz") > cap)
+      // documents losing detection: members of ANY hot bucket (the hot
+      // set is bounded by corpus/cap rows; the join is sketch-sized and
+      // AQE picks the strategy — no forced broadcast, the audit must
+      // stay safe at any scale)
+      val hotDocs = banded.join(hot.select(col("band"), col("sig")),
+          Seq("band", "sig"), "left_semi")
+        .select(col("doc_id")).distinct()
+      sizes.agg(count(lit(1)).as("n_buckets"))
+        .crossJoin(hot.agg(count(lit(1)).as("n_hot_buckets"),
+          coalesce(sum(col("bsz")), lit(0L)).as("band_rows_dropped")))
+        .crossJoin(hotDocs.agg(count(lit(1)).as("docs_affected")))
+        .select(lit(cap).as("cap"), col("n_buckets"),
+          col("n_hot_buckets"), col("band_rows_dropped"),
+          col("docs_affected"))
+        .transform(Materialize.writeOnce)
+    }
   }
 
   /** Incremental (batch-vs-index) face of [[setSimilarityPairs]] — the
@@ -989,13 +964,12 @@ object Dedup {
                                maxBucketSize: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eps = 1e-9
     def shingles(d: DataFrame) =
       shingleRows(d.select(col(idCol), col(textCol)), idCol, textCol, k)
         .select(col("doc_id"), col("s").as("w")).distinct()
-    val tkOld = shingles(corpus).persist(sl); tkOld.count()
-    val tkNew = shingles(batch).persist(sl); tkNew.count()
+    val tkOld = Materialize.sharedNow(shingles(corpus))
+    val tkNew = Materialize.sharedNow(shingles(batch))
     val dfreq = tkOld.groupBy(col("w")).agg(count(lit(1)).as("df"))
     def docTok(tk: DataFrame): DataFrame =
       tk.join(dfreq, Seq("w"), "left")
@@ -1005,8 +979,8 @@ object Dedup {
         .withColumn("s", size(col("ts")))
         .withColumn("p",
           col("s") - ceil(lit(threshold) * col("s") - lit(eps)).cast("int") + 1)
-    val dtOld = docTok(tkOld).persist(sl); dtOld.count()
-    val dtNew = docTok(tkNew).persist(sl); dtNew.count()
+    val dtOld = Materialize.sharedNow(docTok(tkOld))
+    val dtNew = Materialize.sharedNow(docTok(tkNew))
     def prefixRows(dt: DataFrame): DataFrame =
       dt.select(col("doc_id"), col("s"),
           posexplode(expr("slice(ts, 1, p)")).as(Seq("p0", "pt")))
@@ -1014,7 +988,7 @@ object Dedup {
           col("pt.w").as("w"))
     val (pn, po) = capBucketsPaired(prefixRows(dtNew), prefixRows(dtOld),
       Seq("w"), maxBucketSize, "setSimilarityIncremental")
-    val pnP = pn.persist(sl); pnP.count()
+    val pnP = Materialize.sharedNow(pn)
     def leg(a: DataFrame, b: DataFrame, pred: Column): DataFrame =
       a.select(col("w"), col("doc_id").as("na"), col("s").as("sa"),
           col("pos").as("ia"))
@@ -1055,8 +1029,7 @@ object Dedup {
       .select(least(col("na"), col("nb")).as("doc_a"),
         greatest(col("na"), col("nb")).as("doc_b"))
       .distinct()
-      .persist(sl)
-    cand.count()
+      .transform(Materialize.sharedNow)
     // one sorted-token row per doc even under replay: the same text
     // yields the same token set, hence the same ts/s on either side —
     // dropDuplicates keeps the verify's sizes exact (the r16 lesson:
@@ -1138,12 +1111,10 @@ object Dedup {
   def setSimilarityPairs(docs: DataFrame, idCol: String, threshold: Double,
                          textCol: String = "text", k: Int = 3,
                          maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val (cand, docTokens) =
       setSimilarityCandidates(docs, idCol, threshold, textCol, k,
         maxBucketSize)
-    val candP = cand.persist(sl)
-    candP.count()
+    val candP = Materialize.sharedNow(cand)
     // ts is (df, w)-sorted for the prefix lemma; one sort_array pass per
     // candidate doc re-orders the token array into plain binary order so
     // the per-PAIR intersection is a zero-alloc graft_soverlap merge
@@ -1182,7 +1153,6 @@ object Dedup {
       maxBucketSize: Int): (DataFrame, DataFrame) = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     // the set universe is k-shingles (k = 1 -> word sets). Prefix
     // filtering needs a DIVERSE universe to prune: a tiny vocabulary
     // (the 31-word synthetic corpus) makes every "rare" prefix token
@@ -1194,8 +1164,7 @@ object Dedup {
         idCol, textCol, k)
       .select(col("doc_id"), col("s").as("w"))
       .distinct()
-      .persist(sl)
-    tk.count()
+      .transform(Materialize.sharedNow)
     val freq = tk.groupBy(col("w")).agg(count(lit(1)).as("df"))
     // ceil over the RATIONAL t·s, guarded against float overshoot: for a
     // threshold whose double sits just above its rational (0.8, 0.7 …),
@@ -1216,8 +1185,7 @@ object Dedup {
       .withColumn("pi",
         col("s") -
           ceil(lit(idxFrac) * col("s") - lit(eps)).cast("int") + 1)
-      .persist(sl)
-    docTokens.count()
+      .transform(Materialize.sharedNow)
     // prefix rows carry the 1-based POSITION in the doc's sorted set —
     // the positional filter's input
     def prefixRows(lenCol: String): DataFrame =
@@ -1287,11 +1255,8 @@ object Dedup {
                            k: Int = 3, maxBucketSize: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val tk = containmentTokens(docs, idCol, textCol, k).persist(sl)
-    tk.count()
-    val docTokens = containmentDocTokens(tk).persist(sl)
-    docTokens.count()
+    val tk = Materialize.sharedNow(containmentTokens(docs, idCol, textCol, k))
+    val docTokens = Materialize.sharedNow(containmentDocTokens(tk))
     containmentSelfPairsFrom(docTokens, threshold, maxBucketSize)
   }
 
@@ -1338,7 +1303,6 @@ object Dedup {
                                maxBucketSize: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eps = 1e-9
     val docTokens = docTokens0
       .withColumn("p",
@@ -1369,8 +1333,7 @@ object Dedup {
       .select(least(col("na"), col("nb")).as("doc_a"),
         greatest(col("na"), col("nb")).as("doc_b"))
       .distinct()
-      .persist(sl)
-    cand.count()
+      .transform(Materialize.sharedNow)
     // re-sorted once per doc, merge-walk per pair (r22 — see
     // setSimilarityPairs)
     graft.functions.GraftFunctions.register(docTokens.sparkSession)
@@ -1430,7 +1393,6 @@ object Dedup {
                                  maxBucketSize: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eps = 1e-9
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // NON-distinct grams: the weights ARE the duplicate counts
@@ -1441,16 +1403,14 @@ object Dedup {
         typedLit(Seq.empty[String]))).as("w"))
     val tf = grams.groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("tf"))
-      .persist(sl)
-    tf.count()
+      .transform(Materialize.sharedNow)
     val freq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val docTokens = tf.join(freq, Seq("w"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(
           struct(col("df"), col("w"), col("tf")))).as("ts"),
         sum(col("tf")).as("sw"))
-      .persist(sl)
-    docTokens.count()
+      .transform(Materialize.sharedNow)
     // prefix rows carry the suffix weight: cumulative tf from the row's
     // position to the end of the doc's sorted token list
     val prefix = docTokens
@@ -1487,8 +1447,7 @@ object Dedup {
       // row bounds all of m)
       .filter(col("bound").cast("double") >= alpha)
       .select(col("doc_a"), col("doc_b"))
-      .persist(sl)
-    cand.count()
+      .transform(Materialize.sharedNow)
     // MERGE-WALK verify (r19): one codegen'd sorted-merge Σ min(tf)
     // per pair instead of the exploded shared-token join — the same
     // candidate-row-bound shape as the containment faces
@@ -1528,7 +1487,6 @@ object Dedup {
                                maxBucketSize: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eps = 1e-9
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val grams = docs.select(col(idCol).as("doc_id"),
@@ -1538,16 +1496,14 @@ object Dedup {
         typedLit(Seq.empty[String]))).as("w"))
     val tf = grams.groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("tf"))
-      .persist(sl)
-    tf.count()
+      .transform(Materialize.sharedNow)
     val freq = tf.groupBy(col("w")).agg(count(lit(1)).as("df"))
     val docTokens = tf.join(freq, Seq("w"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(
           struct(col("df"), col("w"), col("tf")))).as("ts"),
         sum(col("tf")).as("sw"))
-      .persist(sl)
-    docTokens.count()
+      .transform(Materialize.sharedNow)
     val rows = docTokens
       .select(col("doc_id"), col("sw"),
         posexplode(col("ts")).as(Seq("p0", "pt")))
@@ -1558,8 +1514,7 @@ object Dedup {
         col("pt.w").as("w"), col("pt.tf").as("tf"))
       // both candidate-join sides read this relation (prefix is a
       // filter of it), so the per-doc suffix-weight window runs once
-      .persist(sl)
-    rows.count()
+      .transform(Materialize.sharedNow)
     val prefix = rows.filter(col("suffw").cast("double") >=
       lit(threshold) * col("sw") - lit(eps))
     val (pPfx, pAll) = capBucketsPaired(prefix, rows, Seq("w"),
@@ -1620,8 +1575,7 @@ object Dedup {
         lit(threshold) * col("sa") - lit(eps))
       .select(least(col("na"), col("nb")).as("doc_a"),
         greatest(col("na"), col("nb")).as("doc_b"))
-      .persist(sl)
-    cand.count()
+      .transform(Materialize.sharedNow)
     // MERGE-WALK verify (r19): containment candidates are inherently
     // false-positive-heavy (one shared rare early token defeats every
     // candidate-level bound — at the k=4 ladder rung 7.1M of 7.1M
@@ -1655,7 +1609,6 @@ object Dedup {
   private def weightedIncrementalRows(corpus: DataFrame, batch: DataFrame,
                                       idCol: String, textCol: String,
                                       k: Int): WeightedSides = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     def grams(d: DataFrame) = d.select(col(idCol).as("doc_id"),
       explode(coalesce(
@@ -1664,8 +1617,8 @@ object Dedup {
         typedLit(Seq.empty[String]))).as("w"))
     def tfOf(d: DataFrame) = grams(d).groupBy(col("doc_id"), col("w"))
       .agg(count(lit(1)).as("tf"))
-    val tfOld = tfOf(corpus).persist(sl); tfOld.count()
-    val tfNew = tfOf(batch).persist(sl); tfNew.count()
+    val tfOld = Materialize.sharedNow(tfOf(corpus))
+    val tfNew = Materialize.sharedNow(tfOf(batch))
     val dfreq = tfOld.groupBy(col("w")).agg(count(lit(1)).as("df"))
     def docTok(tf: DataFrame): DataFrame =
       tf.join(dfreq, Seq("w"), "left")
@@ -1675,8 +1628,8 @@ object Dedup {
         .agg(sort_array(collect_list(
             struct(col("df"), col("w"), col("tf")))).as("ts"),
           sum(col("tf")).as("sw"))
-    val dtOld = docTok(tfOld).persist(sl); dtOld.count()
-    val dtNew = docTok(tfNew).persist(sl); dtNew.count()
+    val dtOld = Materialize.sharedNow(docTok(tfOld))
+    val dtNew = Materialize.sharedNow(docTok(tfNew))
     def rowsOf(dt: DataFrame): DataFrame =
       dt.select(col("doc_id"), col("sw"),
           posexplode(col("ts")).as(Seq("p0", "pt")))
@@ -1712,14 +1665,13 @@ object Dedup {
                                        maxBucketSize: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eps = 1e-9
     val ws = weightedIncrementalRows(corpus, batch, idCol, textCol, k)
     def pref(r: DataFrame) = r.filter(col("suffw").cast("double") >=
       lit(threshold) * col("sw") - lit(eps))
     val (pn, po) = capBucketsPaired(pref(ws.rowsNew), pref(ws.rowsOld),
       Seq("w"), maxBucketSize, "weightedSetSimilarityIncremental")
-    val pnP = pn.persist(sl); pnP.count()
+    val pnP = Materialize.sharedNow(pn)
     val alpha = lit(threshold / (1 + threshold)) *
       (col("sa") + col("sb")) - lit(eps)
     def leg(a: DataFrame, b: DataFrame, pred: Column): DataFrame =
@@ -1748,8 +1700,7 @@ object Dedup {
       .select(least(col("na"), col("nb")).as("doc_a"),
         greatest(col("na"), col("nb")).as("doc_b"))
       .distinct()
-      .persist(sl)
-    cand.count()
+      .transform(Materialize.sharedNow)
     // MERGE-WALK verify (r19, the weightedContainmentIncremental shape):
     // per pair one codegen'd sorted-merge Σ min(tf) instead of the
     // exploded shared-token join; arrays resolved and dropped before
@@ -1785,14 +1736,13 @@ object Dedup {
   private def weightedMergeVerify(cand: DataFrame, tf: DataFrame,
                                   sums: DataFrame,
                                   label: String): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docArrs = tf.groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("w"), col("tf"))))
         .as("wt"))
       .select(col("doc_id"),
         expr("transform(wt, x -> x.w)").as("ws"),
         expr("transform(wt, x -> x.tf)").as("tfs"))
-      .persist(sl)
+      .transform(Materialize.shared)
     // the materializing pass doubles as the sizing pass: the agg that
     // would have been a bare count() also sums actual token bytes
     // (~32 B/slot covers the tf long + array offsets; ~96 B/doc covers
@@ -1843,7 +1793,6 @@ object Dedup {
                                      maxBucketSize: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eps = 1e-9
     val ws = weightedIncrementalRows(corpus, batch, idCol, textCol, k)
     def tag(r: DataFrame, t: Int) = r.withColumn("__new", lit(t))
@@ -1853,8 +1802,8 @@ object Dedup {
     val full = tag(ws.rowsNew, 1).unionByName(tag(ws.rowsOld, 0))
     val (pc, fc) = capBucketsPaired(pfx, full, Seq("w"), maxBucketSize,
       "weightedContainmentIncremental")
-    val pcP = pc.persist(sl); pcP.count()
-    val fcP = fc.persist(sl); fcP.count()
+    val pcP = Materialize.sharedNow(pc)
+    val fcP = Materialize.sharedNow(fc)
     def leg(a: DataFrame, b: DataFrame): DataFrame =
       a.select(col("w"), col("doc_id").as("na"), col("sw").as("sa"),
           col("suffw").as("fa"))
@@ -1873,8 +1822,7 @@ object Dedup {
       .select(least(col("na"), col("nb")).as("doc_a"),
         greatest(col("na"), col("nb")).as("doc_b"))
       .distinct()
-      .persist(sl)
-    cand.count()
+      .transform(Materialize.sharedNow)
     // MERGE-WALK verify over the replay-deduped tf relation (r19 —
     // the batch face's shape: containment candidates are false-
     // positive-heavy by nature, so verify must be candidate-row-bound)
@@ -1909,13 +1857,12 @@ object Dedup {
                              maxBucketSize: Int = 0): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val eps = 1e-9
     def shingles(d: DataFrame) =
       shingleRows(d.select(col(idCol), col(textCol)), idCol, textCol, k)
         .select(col("doc_id"), col("s").as("w")).distinct()
-    val tkOld = shingles(corpus).persist(sl); tkOld.count()
-    val tkNew = shingles(batch).persist(sl); tkNew.count()
+    val tkOld = Materialize.sharedNow(shingles(corpus))
+    val tkNew = Materialize.sharedNow(shingles(batch))
     val dfreq = tkOld.groupBy(col("w")).agg(count(lit(1)).as("df"))
     def docTok(tk: DataFrame): DataFrame =
       tk.join(dfreq, Seq("w"), "left")
@@ -1927,8 +1874,8 @@ object Dedup {
         .withColumn("p",
           col("s") -
             ceil(lit(threshold) * col("s") - lit(eps)).cast("int") + 1)
-    val dtOld = docTok(tkOld).persist(sl); dtOld.count()
-    val dtNew = docTok(tkNew).persist(sl); dtNew.count()
+    val dtOld = Materialize.sharedNow(docTok(tkOld))
+    val dtNew = Materialize.sharedNow(docTok(tkNew))
     def rowsOf(dt: DataFrame, lenCol: Column, tag: Int): DataFrame =
       dt.select(col("doc_id"), col("s"),
           posexplode(slice(col("ts"), lit(1), lenCol)).as(Seq("p0", "pt")))
@@ -1941,8 +1888,8 @@ object Dedup {
       .unionByName(rowsOf(dtOld, col("s"), 0))
     val (pc, fc) = capBucketsPaired(pfx, full, Seq("w"), maxBucketSize,
       "containmentIncremental")
-    val pcP = pc.persist(sl); pcP.count()
-    val fcP = fc.persist(sl); fcP.count()
+    val pcP = Materialize.sharedNow(pc)
+    val fcP = Materialize.sharedNow(fc)
     def leg(a: DataFrame, b: DataFrame): DataFrame =
       a.select(col("w"), col("doc_id").as("na"), col("s").as("sa"),
           col("pos").as("ia"))
@@ -1965,8 +1912,7 @@ object Dedup {
       .select(least(col("na"), col("nb")).as("doc_a"),
         greatest(col("na"), col("nb")).as("doc_b"))
       .distinct()
-      .persist(sl)
-    cand.count()
+      .transform(Materialize.sharedNow)
     // one sorted-token row per doc even under replay (same text -> same
     // ts on either side)
     val arr = dtNew.unionByName(dtOld).dropDuplicates("doc_id")
@@ -2024,21 +1970,13 @@ object Dedup {
     * unchanged.
     */
   def resolveClusters(pairs: DataFrame, maxRounds: Int = 64): DataFrame = {
-    // Storage levels split by ACCESS PATTERN (VERDICT r21 task 1): the
-    // pair input is written once and read twice (building edges), so it
-    // stays serialized — big-heap GC relief at zero re-read cost. The
-    // edge set and every round's label relation are re-read on EVERY
-    // iteration (edges once, labels three times per round), and a
-    // serialized block pays a per-READ deserialization — measured as
-    // the er_clusters/graph_components drift in the r21 driver sweep —
-    // so the per-iteration readers store deserialized. Both relations
-    // are candidate-sized (two longs per row), so the deserialized
-    // footprint stays far under any GC-relevant threshold.
-    val perRound = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val p = pairs.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    // the pair input is written once and read twice (building edges);
+    // the edge set and every round's label relation are re-read on EVERY
+    // iteration (edges once, labels three times per round)
+    val p = Materialize.writeOnce(pairs)
     val edges = p.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(p.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .distinct().localCheckpoint(true, perRound)
+      .distinct().transform(Materialize.iterative)
     // round 1 fused into initialization (r22): with identity labels,
     // round 1's neighbor-min step reduces to least(node, min(neighbor))
     // and the pointer jump is a no-op (every label IS its own label), so
@@ -2051,7 +1989,7 @@ object Dedup {
       .agg(min(col("dst")).as("__m"))
       .select(col("src").as("node"),
         least(col("src"), col("__m")).as("label"))
-      .localCheckpoint(true, perRound)
+      .transform(Materialize.iterative)
     var changed = 1L
     var rounds = 0
     while (changed > 0) {
@@ -2070,7 +2008,7 @@ object Dedup {
       val next = stepped.join(dict, col("l1") === col("dn"), "left")
         .select(col("node"), col("old"),
           least(col("l1"), coalesce(col("dl"), col("l1"))).as("label"))
-        .localCheckpoint(true, perRound)
+        .transform(Materialize.iterative)
       changed = next.filter(col("label") =!= col("old")).count()
       labels = next.select(col("node"), col("label"))
     }
@@ -2135,8 +2073,7 @@ object Dedup {
                        textCol: String = "text", k: Int = 3,
                        maxBucketSize: Int = 0): DataFrame = {
     val collapsed = exactKeepFirst(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    collapsed.count() // serial materialization — see lshCandidatePairs
+      .transform(Materialize.sharedNow)
     fuzzyKeepFirst(collapsed,
       fuzzy(collapsed, idCol, numHashes, bands, threshold, textCol, k,
         maxBucketSize),
@@ -2156,8 +2093,7 @@ object Dedup {
                       textCol: String = "text", k: Int = 3,
                       maxBucketSize: Int = 0): DataFrame = {
     val collapsed = exactKeepFirst(docs, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    collapsed.count() // serial materialization — see lshCandidatePairs
+      .transform(Materialize.sharedNow)
     fuzzyKeepBest(collapsed,
       fuzzy(collapsed, idCol, numHashes, bands, threshold, textCol, k,
         maxBucketSize),
@@ -2238,8 +2174,7 @@ object Dedup {
       s"4x16-bit banding guarantees recall only for maxHamming <= 3 (got $maxHamming)")
     // persist: sketch-sized (4 rows/doc); read once by both join sides
     val banded0 = simhashBandIndex(sketches)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    banded0.count() // serial materialization — see lshCandidatePairs
+      .transform(Materialize.sharedNow)
     val banded = capBuckets(banded0, Seq("band", "v"), maxBucketSize,
       "simhashPairs")
     val cand = banded.as("a")
@@ -2269,18 +2204,14 @@ object Dedup {
                               batchSketches: DataFrame,
                               maxHamming: Int,
                               maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bOld = simhashBandIndex(corpusSketches).persist(sl)
-    bOld.count() // serial materialization — see lshCandidatePairs
-    val bNew = simhashBandIndex(batchSketches).persist(sl)
-    bNew.count()
+    val bOld = Materialize.sharedNow(simhashBandIndex(corpusSketches))
+    val bNew = Materialize.sharedNow(simhashBandIndex(batchSketches))
     // eager candidate-sized materialization + cache release — the
     // per-ingest path must not accumulate cached band relations
-    val result = incrementalSimhashPairsIndexed(bOld, bNew, maxHamming,
-      maxBucketSize).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    bOld.unpersist()
-    bNew.unpersist()
-    result
+    Materialize.withPersisted(bOld, bNew) {
+      Materialize.writeOnce(incrementalSimhashPairsIndexed(bOld, bNew,
+        maxHamming, maxBucketSize))
+    }
   }
 
   /** [[incrementalSimhashPairs]] over PREBUILT band relations

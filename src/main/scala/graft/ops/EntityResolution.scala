@@ -222,9 +222,8 @@ object EntityResolution {
     // face reads each side once and stays unpersisted). First consumer
     // is the cap's single-threaded checkpoint action, so no count()
     // race guard is needed.
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val probe = probeKeys(df, idCol, strCol, d).persist(sl)
-    val index = segmentKeys(df, idCol, strCol, d).persist(sl)
+    val probe = Materialize.shared(probeKeys(df, idCol, strCol, d))
+    val index = Materialize.shared(segmentKeys(df, idCol, strCol, d))
     val (pc, ic, hotOpt) = Dedup.capBucketsPairedHot(probe, index, keys,
       maxBucketSize, "editDistanceSelfJoinRescued")
     val base = pc.join(ic, keys)
@@ -244,7 +243,7 @@ object EntityResolution {
         // the complement relation, and they run inside ONE job (the
         // rescue cap's checkpoint) whose union branches would otherwise
         // race to compute the same cache partitions (the block-lock
-        // stall documented at lshCandidatePairs)
+        // stall documented at Materialize.sharedNow)
         val comp = probe.join(h, keys)
             .select(col("__pid").as("mid"), col("__pstr").as("mstr"),
               col("pos"), length(col("seg")).as("slen"))
@@ -256,8 +255,7 @@ object EntityResolution {
             col("mstr").substr(col("pos") + col("slen") + 1,
               length(col("mstr")))).as("cstr"))
           .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        comp.count()
+          .transform(Materialize.sharedNow)
         // deletion neighborhood U_{<=d}: every string reachable from the
         // complement by 0..d single-character deletions. sequence(1, 0)
         // DESCENDS in Spark, so empty strings are guarded explicitly.
@@ -272,14 +270,13 @@ object EntityResolution {
         // persisted: read twice (the cap's bucket count and the capped
         // self-join below) — one neighborhood build, not two
         val nb = levels.reduce(_ unionByName _).distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .transform(Materialize.shared)
         // the second-family candidate join, under the SAME cap: a
         // deletion-key bucket that floods (exact-duplicate complements)
         // is a truly quadratic pair set — dropped loudly, never silently
         val nbc = Dedup.capBuckets(nb, Seq("v"), maxBucketSize,
           "editDistanceRescue")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        nbc.count()
+          .transform(Materialize.sharedNow)
         val rcand = nbc.select(col("v"), col("mid").as("id_a"))
           .join(nbc.select(col("v"), col("mid").as("id_b")), Seq("v"))
           .filter(col("id_a") < col("id_b"))
@@ -311,9 +308,8 @@ object EntityResolution {
       "rescue only makes sense with the cap armed (maxBucketSize > 0)")
     val keys = Seq("l", "i", "seg")
     // persisted for the same three-reads shape as the self-join rescue
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val probe = probeKeys(left, leftId, leftStr, d).persist(sl)
-    val index = segmentKeys(right, rightId, rightStr, d).persist(sl)
+    val probe = Materialize.shared(probeKeys(left, leftId, leftStr, d))
+    val index = Materialize.shared(segmentKeys(right, rightId, rightStr, d))
     val (pc, ic, hotOpt) = Dedup.capBucketsPairedHot(probe, index, keys,
       maxBucketSize, "editDistanceJoinRescued")
     val base = pc.join(ic, keys)
@@ -330,8 +326,8 @@ object EntityResolution {
         // the same shapes as the self-join rescue: each complement
         // feeds d+1 deletion levels inside one job (cache-race guard),
         // each neighborhood is read twice (cap count + candidate join)
-        def comp(rel: DataFrame, id: String, str: String): DataFrame = {
-          val c = rel.join(h, keys)
+        def comp(rel: DataFrame, id: String, str: String): DataFrame =
+          rel.join(h, keys)
             .select(col(id).as("mid"), col(str).as("mstr"),
               col("pos"), length(col("seg")).as("slen"))
             .select(col("mid"), concat(
@@ -339,10 +335,7 @@ object EntityResolution {
               col("mstr").substr(col("pos") + col("slen") + 1,
                 length(col("mstr")))).as("cstr"))
             .distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          c.count()
-          c
-        }
+            .transform(Materialize.sharedNow)
         val delOnce = "CASE WHEN length(v) >= 1 THEN " +
           "transform(sequence(1, length(v)), " +
           "p -> concat(substr(v, 1, p - 1), substr(v, p + 1, length(v)))) " +
@@ -352,7 +345,7 @@ object EntityResolution {
             (prev, _) =>
               prev.select(col("mid"), explode(expr(delOnce)).as("v"))
           }.reduce(_ unionByName _).distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .transform(Materialize.shared)
         val (nbL, nbR) = Dedup.capBucketsPaired(
           neighborhood(comp(probe, "__pid", "__pstr")),
           neighborhood(comp(index, "__rid", "__rstr")),

@@ -578,7 +578,7 @@ object EventOps {
     * user, aggregated immediately map-side; the pattern join is the
     * |types|²-sized e2 relation against the |types|-sized last relation
     * — |types|³ per user, bounded by the type alphabet, NEVER events³
-    * (see the events_{uni,hot}_seq3 ScaleProbe ladder: a planted bot
+    * (the events_{uni,hot}_seq3 ladder in BASELINE.md: a planted bot
     * user holding 20% of the corpus costs linear build fanout, not a
     * cubic blowup).
     */
@@ -664,9 +664,7 @@ object EventOps {
     // (measured: same wall time locally, half the billed GC), so the
     // query holds strictly less heap hostage wherever the session is
     // already under pressure.
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-    val valid2 = gapSupport2(ev, maxGapSeconds).persist(sl)
-    valid2.count()
+    val valid2 = Materialize.sharedSerialized(gapSupport2(ev, maxGapSeconds))
     val pairs = valid2.select(col("type_a"), col("type_b")).distinct()
     val markers = valid2.select(col("user_id"), col("type_a"),
       col("type_b"), col("o"), col("qts").as("mts"), lit(1).as("is_m"),

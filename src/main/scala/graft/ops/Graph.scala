@@ -16,13 +16,8 @@ import org.apache.spark.sql.functions._
   * the per-iteration join never reshuffles the (static, large) edge set;
   * only the (node-sized) rank vector moves.
   *
-  * Checkpoint storage is DESERIALIZED (r22, VERDICT r21 task 2): every
-  * checkpointed relation here is re-read on each iteration (the static
-  * edge/degree sides N times, the per-round vector at least once), and
-  * a serialized block charges a deserialization to every read — the
-  * measured graph_components +15-25% of the r21 blanket-SER sweep. The
-  * relations are node- or edge-sized pairs of longs, far below the
-  * big-heap GC regime the SER blanket existed for.
+  * Every checkpointed relation here is re-read on each iteration, so
+  * the cuts are [[Materialize.iterative]].
   *
   * Determinism across engines and shuffle orders: each contribution
   * `rank/deg` snaps to the 1e-12 grid and accumulates as an exact
@@ -42,12 +37,12 @@ object Graph {
       teleport: Double = 0.15, damping: Double = 0.85): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.iterative)
     // static per-edge (src, dst, deg) — computed once, reused per
     // iteration, never re-derived from the scan
-    val ed = e.join(deg, "src").localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ed = Materialize.iterative(e.join(deg, "src"))
     var ranks = deg.select(col("src").as("node"), lit(1.0).as("rank"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.iterative)
     for (_ <- 1 to iterations) {
       val contribs = ed.join(ranks, col("src") === col("node"))
         .select(col("dst"),
@@ -59,7 +54,7 @@ object Graph {
           round(lit(teleport) + lit(damping) *
             coalesce(col("s"), lit(0).cast("decimal(38,12)"))
               .cast("double"), 12).as("rank"))
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(Materialize.iterative)
     }
     ranks.select(col("node"), round(col("rank"), 6).as("rank"))
   }
@@ -110,7 +105,7 @@ object Graph {
         struct(col("b").as("s"), col("a").as("d"), col("dega").as("dd")))
         .as("o"))
       .select(col("o.s").as("s"), col("o.d").as("d"), col("o.dd").as("dd"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.iterative)
     val w1 = oriented.select(col("s"), col("d").as("v"), col("dd").as("dv"))
     val w2 = oriented.select(col("s"), col("d").as("w"), col("dd").as("dw"))
     // the wedge relation is the quadratic one (sum of C(out-deg, 2));
@@ -166,7 +161,7 @@ object Graph {
     * constant; a retry can never replay the whole peel history).
     */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = edges.select(col("a"), col("b")).distinct().localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var e = Materialize.iterative(edges.select(col("a"), col("b")).distinct())
     var r = 0
     while (r < rounds) {
       val deg = e.select(col("a").as("node"))
@@ -175,7 +170,7 @@ object Graph {
       val keep = deg.filter(col("deg") >= k).select(col("node"))
       e = e.join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b")).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("a"), col("b")).transform(Materialize.iterative)
       r += 1
     }
     e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
@@ -194,9 +189,9 @@ object Graph {
     val e = edges.select(col("a"), col("b")).distinct()
     val adj = e.select(col("a").as("u"), col("b").as("v"))
       .unionAll(e.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Materialize.iterative)
     var visited = adj.sparkSession.range(1)
-      .select(lit(source).as("node"), lit(0).as("dist")).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(lit(source).as("node"), lit(0).as("dist")).transform(Materialize.iterative)
     var frontier = visited
     var h = 0
     while (h < maxHops) {
@@ -205,8 +200,8 @@ object Graph {
         .join(visited.select(col("node").as("__seen")),
           col("node") === col("__seen"), "left_anti")
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      visited = visited.unionByName(next).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(Materialize.iterative)
+      visited = visited.unionByName(next).transform(Materialize.iterative)
       frontier = next
       h += 1
     }

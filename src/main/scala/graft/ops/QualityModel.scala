@@ -113,11 +113,9 @@ object QualityModel {
   def trainHashedLogReg(df: DataFrame, idCol: String, textCol: String,
                         labelCol: Column, dim: Int = 64, lr: Double = 0.5,
                         iters: Int = 3): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val sk = featureSketch(df, idCol, textCol, labelCol, dim).persist(sl)
-    val w = trainHashedLogRegWith(sk, idCol, lr, iters)
-    sk.unpersist() // weights are eagerly checkpointed — sketch is done
-    w
+    val sk = Materialize.shared(featureSketch(df, idCol, textCol, labelCol, dim))
+    // weights are eagerly checkpointed — the sketch is done after training
+    Materialize.withPersisted(sk)(trainHashedLogRegWith(sk, idCol, lr, iters))
   }
 
   /** Train against an ALREADY-BUILT (and ideally persisted/checkpointed)
@@ -154,7 +152,7 @@ object QualityModel {
         .select(col("feature"),
           grid6(coalesce(col("w"), lit(0.0)) -
             lit(lr) * coalesce(col("g"), lit(0.0))).as("w"))
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // cut the per-iteration lineage stack
+        .transform(Materialize.writeOnce) // cut the per-iteration lineage stack
     }
     w
   }

@@ -376,17 +376,13 @@ object Similarity {
                             planes: Int, dim: Int,
                             threshold: Double,
                             maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val bOld = srpIndex(corpus, planes, dim).persist(sl)
-    bOld.count() // serial materialization — see Dedup.lshCandidatePairs
-    val bNew = srpIndex(batch, planes, dim).persist(sl)
-    bNew.count()
-    val result = incrementalSrpNearDupIndexed(bOld, bNew, threshold,
-      maxBucketSize)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // eager + cache release: the per-ingest path
-    bOld.unpersist()
-    bNew.unpersist()
-    result
+    val bOld = Materialize.sharedNow(srpIndex(corpus, planes, dim))
+    val bNew = Materialize.sharedNow(srpIndex(batch, planes, dim))
+    // eager cut + cache release: the per-ingest path
+    Materialize.withPersisted(bOld, bNew) {
+      Materialize.writeOnce(incrementalSrpNearDupIndexed(bOld, bNew, threshold,
+        maxBucketSize))
+    }
   }
 
   /** [[incrementalSrpNearDup]] over PREBUILT index relations
@@ -543,17 +539,13 @@ object Similarity {
   def incrementalSemanticPairs(corpus: DataFrame, batch: DataFrame,
                                codebook: DataFrame, threshold: Double,
                                maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val iOld = semanticIndex(corpus, codebook).persist(sl)
-    iOld.count() // serial materialization — see Dedup.lshCandidatePairs
-    val iNew = semanticIndex(batch, codebook).persist(sl)
-    iNew.count()
-    val result = incrementalSrpNearDupIndexed(iOld, iNew, threshold,
-      maxBucketSize)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // eager + cache release: the per-ingest path
-    iOld.unpersist()
-    iNew.unpersist()
-    result
+    val iOld = Materialize.sharedNow(semanticIndex(corpus, codebook))
+    val iNew = Materialize.sharedNow(semanticIndex(batch, codebook))
+    // eager cut + cache release: the per-ingest path
+    Materialize.withPersisted(iOld, iNew) {
+      Materialize.writeOnce(incrementalSrpNearDupIndexed(iOld, iNew, threshold,
+        maxBucketSize))
+    }
   }
 
   /** The semantically deduplicated corpus: resolve
@@ -645,7 +637,7 @@ object Similarity {
     * the `ivfpq_*_fixedcb` probes pinned for ENCODE. With a fixed seed
     * relation each iteration is one broadcast assign over the (n x m)
     * slice relation + a codebook-sized mean: linear in the corpus
-    * (`pq_train_*` ScaleProbe rows in BASELINE.md).
+    * (`pq_train_*` rows in BASELINE.md).
     */
   def pqCodebookLearnedFrom(embeddings: DataFrame, seedCb: DataFrame,
                             m: Int, dim: Int, maxIters: Int): DataFrame = {
@@ -662,39 +654,41 @@ object Similarity {
         (0 until m).map(j => struct(lit(j).as("sub"),
           slice(col("embedding"), j * sub + 1, sub).as("xe"))): _*)).as("s"))
       .select(col("vec_id"), col("s.sub").as("sub"), col("s.xe").as("xe"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var cb = seedCb
-      .select(col("sub").cast("int"), col("code").cast("long"),
-        col("ce").cast("array<double>"))
-      .as[(Int, Long, Seq[Double])].collect().toSeq.sortBy(t => (t._1, t._2))
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
-      it += 1
-      val cbDf = cb.toDF("sub", "code", "ce")
-      val d2 = round(
-        fdot(col("xe"), col("xe")) - lit(2.0) * fdot(col("xe"), col("ce")) +
-          fdot(col("ce"), col("ce")), 6)
-      val next = xs.join(broadcast(cbDf), Seq("sub"))
-        .select(col("vec_id"), col("sub"), col("xe"), col("code"),
-          d2.as("d2"))
-        .groupBy(col("vec_id"), col("sub"))
-        // xe is functionally dependent on the group key, so first() is
-        // value-deterministic here
-        .agg(min(struct(col("d2"), col("code"))).as("best"),
-          first(col("xe")).as("xe"))
-        .select(col("sub"), col("best.code").as("code"), col("xe"))
-        .groupBy(col("sub"), col("code"))
-        .agg(call_function("graft_vec_avg", col("xe")).as("ce0"))
-        .select(col("sub"), col("code"),
-          transform(col("ce0"), v => round(v, 6)).as("ce"))
-        .as[(Int, Long, Seq[Double])].collect().toSeq
-        .sortBy(t => (t._1, t._2))
-      converged = next == cb
-      cb = next
+      .transform(Materialize.shared)
+    val learned = Materialize.withPersisted(xs) {
+      var cb = seedCb
+        .select(col("sub").cast("int"), col("code").cast("long"),
+          col("ce").cast("array<double>"))
+        .as[(Int, Long, Seq[Double])].collect().toSeq.sortBy(t => (t._1, t._2))
+      var it = 0
+      var converged = false
+      while (it < maxIters && !converged) {
+        it += 1
+        val cbDf = cb.toDF("sub", "code", "ce")
+        val d2 = round(
+          fdot(col("xe"), col("xe")) - lit(2.0) * fdot(col("xe"), col("ce")) +
+            fdot(col("ce"), col("ce")), 6)
+        val next = xs.join(broadcast(cbDf), Seq("sub"))
+          .select(col("vec_id"), col("sub"), col("xe"), col("code"),
+            d2.as("d2"))
+          .groupBy(col("vec_id"), col("sub"))
+          // xe is functionally dependent on the group key, so first() is
+          // value-deterministic here
+          .agg(min(struct(col("d2"), col("code"))).as("best"),
+            first(col("xe")).as("xe"))
+          .select(col("sub"), col("best.code").as("code"), col("xe"))
+          .groupBy(col("sub"), col("code"))
+          .agg(call_function("graft_vec_avg", col("xe")).as("ce0"))
+          .select(col("sub"), col("code"),
+            transform(col("ce0"), v => round(v, 6)).as("ce"))
+          .as[(Int, Long, Seq[Double])].collect().toSeq
+          .sortBy(t => (t._1, t._2))
+        converged = next == cb
+        cb = next
+      }
+      cb
     }
-    xs.unpersist()
-    cb.toDF("sub", "code", "ce")
+    learned.toDF("sub", "code", "ce")
   }
 
   /** PQ encoding: each vector becomes `m` sub-codes, code `j` = the
@@ -1140,95 +1134,6 @@ object Similarity {
         round(col("score"), 6).as("q8_score"))
   }
 
-  /** Residual ADC scores for an EXPLICIT per-query candidate set
-    * (query_id, vec_id) instead of probed cells — the scoring core of
-    * the binary-cascade server. Same q·x = q·c + q_r·x_r decomposition
-    * as [[ivfPqResidualAdcScores]]; the LUT covers exactly the
-    * (query, cell, sub, code) combinations the candidates touch, so it
-    * stays candidate-bounded (≤ |Q| · H · m entries) regardless of how
-    * candidates scatter across cells.
-    */
-  private def ivfPqResidualAdcScoresFor(candIds: DataFrame, index: DataFrame,
-                                        ivfCodebook: DataFrame,
-                                        pqCbRes: DataFrame,
-                                        queries: DataFrame,
-                                        m: Int, dim: Int): DataFrame = {
-    val sub = dim / m
-    val q = queries.select(col("vec_id").as("query_id"),
-      col("embedding").cast("array<double>").as("qe"))
-    val c = ivfCodebook.select(col("vec_id").as("centroid_id"),
-      col("embedding").cast("array<double>").as("cce"))
-    val candIdx = index.join(broadcast(candIds), Seq("vec_id"))
-    val probed = candIdx.select(col("query_id"), col("centroid_id"))
-      .distinct()
-    val qc = broadcast(probed).join(broadcast(q), Seq("query_id"))
-      .join(broadcast(c), Seq("centroid_id"))
-      .select(col("query_id"), col("centroid_id"),
-        round(fdot(col("qe"), col("cce")), 6).as("qcdot"),
-        zip_with(col("qe"), col("cce"), (a, b) => a - b).as("qr"))
-    val qrs = qc.select(col("query_id"), col("centroid_id"), explode(array(
-      (0 until m).map(j => struct(lit(j).as("sub"),
-        slice(col("qr"), j * sub + 1, sub).as("qrsub"))): _*)).as("s"))
-      .select(col("query_id"), col("centroid_id"),
-        col("s.sub").as("sub"), col("s.qrsub").as("qrsub"))
-    val needed = candIdx.select(col("query_id"), col("centroid_id"),
-      col("sub"), col("code")).distinct()
-    val lut = needed
-      .join(broadcast(pqCbRes), Seq("sub", "code"))
-      .join(broadcast(qrs), Seq("query_id", "centroid_id", "sub"))
-      .select(col("query_id"), col("centroid_id"), col("sub"), col("code"),
-        round(fdot(col("qrsub"), col("ce")), 6).as("pdot"))
-    candIdx.join(broadcast(lut), Seq("query_id", "centroid_id", "sub", "code"))
-      .join(broadcast(qc.select(col("query_id"), col("centroid_id"),
-        col("qcdot"))), Seq("query_id", "centroid_id"))
-      .groupBy(col("query_id"), col("vec_id"))
-      .agg(round(max(col("qcdot")) + sum(col("pdot")), 6).as("adc_score"))
-  }
-
-  /** Three-tier cascade server: binary sign-bit HAMMING coarse stage →
-    * residual-PQ ADC → exact float rerank. The hamming scan touches 16
-    * bytes per corpus vector (the cheapest whole-corpus pass that
-    * exists) and keeps `hammingList` candidates per query; residual ADC
-    * then scores ONLY those candidates (8 code bytes each, fetched by
-    * id); the float rerank touches `shortlist` vectors. Contrast with
-    * the IVF-probed server ([[ivfPqResidualTopKIndexedReranked]]):
-    * IVF's coarse stage is corpus-INDEPENDENT (probed cells only) but
-    * needs the cell structure to be good; the binary tier is
-    * corpus-LINEAR at 16 B/vector but structure-free. Which serves
-    * cheaper at a given recall is an empirical question —
-    * `RecallLadder <sf> cascade` measures it (BASELINE.md r16).
-    */
-  def ivfPqResidualTopKBinaryCascade(index: DataFrame,
-                                     ivfCodebook: DataFrame,
-                                     pqCbRes: DataFrame,
-                                     queries: DataFrame, store: DataFrame,
-                                     binCodes: DataFrame,
-                                     m: Int, dim: Int, hammingList: Int,
-                                     shortlist: Int, k: Int): DataFrame = {
-    require(hammingList >= shortlist && shortlist >= k,
-      s"tiers must narrow: hammingList ($hammingList) >= shortlist " +
-        s"($shortlist) >= k ($k)")
-    val words = dim / 32
-    val q = quantizeBinary(queries.select(col("vec_id"), col("embedding")),
-      dim)
-      .select(col("vec_id").as("query_id") +:
-        (1 to words).map(i => col(s"b$i").as(s"qb$i")): _*)
-    val ham = (1 to words)
-      .map(i => bit_count(col(s"qb$i").bitwiseXOR(col(s"b$i"))))
-      .reduce(_ + _)
-    val cand = broadcast(q)
-      .join(binCodes, col("vec_id") =!= col("query_id"))
-      .withColumn("hamming", ham.cast("int"))
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("hamming"), col("vec_id"))))
-      .filter(col("rn") <= hammingList)
-      .select(col("query_id"), col("vec_id"))
-    rerankShortlist(
-      ivfPqResidualAdcScoresFor(cand, index, ivfCodebook, pqCbRes,
-        queries, m, dim),
-      queries, store, shortlist, k)
-  }
-
   /** Recall@k of an APPROXIMATE top-k result against the exact one —
     * the eval primitive that decides whether an IVF / PQ configuration
     * (cells, nprobe, m) is allowed to serve: per query, the fraction of
@@ -1390,138 +1295,6 @@ object Similarity {
     corpus.join(flagged, corpus("vec_id") === col("__flag_id"), "left_anti")
   }
 
-  // ---- OPQ rotation (Ge et al., "Optimized Product Quantization", CVPR
-  // 2013 — the parametric solution): learn an ORTHOGONAL rotation that
-  // decorrelates dimensions and balances variance across the m PQ
-  // subspaces before sub-quantization, shrinking ADC quantization error
-  // without touching index or serving shape (rotating both data and
-  // query preserves all dot products).
-
-  /** Mean vector and (centered) covariance of an embedding column,
-    * collected to the driver — (dim) and (dim x dim) doubles, driver-
-    * sized by definition at any corpus scale. ONE distributed pass: the
-    * per-row flattened outer product x⊗x (dim² doubles) partial-
-    * aggregates map-side through `graft_vec_avg`, so nothing corpus-
-    * sized moves. At very large corpora the classical practice is to
-    * estimate Σ on a sample; compose with `Dedup.hashSample` upstream —
-    * the estimator itself does not need to see every row.
-    */
-  def meanAndCovariance(embeddings: DataFrame, dim: Int)
-      : (Array[Double], Array[Array[Double]]) = {
-    GraftFunctions.register(embeddings.sparkSession)
-    val x = col("embedding")
-    val outer = flatten(transform(x, xi =>
-      transform(x, xj => xi.cast("double") * xj.cast("double"))))
-    val row = embeddings.agg(
-      call_function("graft_vec_avg", x).as("mu"),
-      call_function("graft_vec_avg", outer).as("xxt")).head()
-    val mu = row.getSeq[Double](0).toArray
-    val xxt = row.getSeq[Double](1).toArray
-    require(mu.length == dim && xxt.length == dim * dim,
-      s"meanAndCovariance: expected dim=$dim, got ${mu.length}")
-    val cov = Array.tabulate(dim, dim) { (i, j) =>
-      // 1e-6 grid (house determinism convention): double partial-sum
-      // merge order varies across runs; the grid absorbs it so the
-      // eigendecomposition below sees a replayable matrix
-      math.rint((xxt(i * dim + j) - mu(i) * mu(j)) * 1e6) / 1e6
-    }
-    (mu, cov)
-  }
-
-  /** Driver-side eigendecomposition of a symmetric matrix via cyclic
-    * Jacobi rotations — deterministic (fixed upper-triangle sweep order,
-    * fixed tolerance, no RNG) and exact enough at dim=64 (off-diagonal
-    * driven below 1e-12 of the Frobenius norm). Returns (eigenvalues,
-    * eigenvectors as COLUMNS), sorted by descending eigenvalue with each
-    * vector's largest-magnitude component forced positive (sign
-    * canonicalization, so replays agree).
-    */
-  private[graft] def jacobiEigSym(a0: Array[Array[Double]])
-      : (Array[Double], Array[Array[Double]]) = {
-    val n = a0.length
-    val a = a0.map(_.clone())
-    val v = Array.tabulate(n, n)((i, j) => if (i == j) 1.0 else 0.0)
-    def offNorm(): Double = {
-      var s = 0.0
-      for (i <- 0 until n; j <- i + 1 until n) s += a(i)(j) * a(i)(j)
-      math.sqrt(2 * s)
-    }
-    val frob = math.sqrt(a0.map(_.map(x => x * x).sum).sum)
-    var sweep = 0
-    while (offNorm() > 1e-12 * math.max(frob, 1e-300) && sweep < 100) {
-      sweep += 1
-      for (p <- 0 until n; q <- p + 1 until n if math.abs(a(p)(q)) > 0) {
-        // classical 2x2 symmetric Schur rotation annihilating a(p)(q)
-        val theta = (a(q)(q) - a(p)(p)) / (2.0 * a(p)(q))
-        val t = math.signum(theta + (if (theta == 0) 1.0 else 0.0)) /
-          (math.abs(theta) + math.sqrt(theta * theta + 1.0))
-        val c = 1.0 / math.sqrt(t * t + 1.0)
-        val s = t * c
-        for (k <- 0 until n) {
-          val akp = a(k)(p); val akq = a(k)(q)
-          a(k)(p) = c * akp - s * akq
-          a(k)(q) = s * akp + c * akq
-        }
-        for (k <- 0 until n) {
-          val apk = a(p)(k); val aqk = a(q)(k)
-          a(p)(k) = c * apk - s * aqk
-          a(q)(k) = s * apk + c * aqk
-        }
-        for (k <- 0 until n) {
-          val vkp = v(k)(p); val vkq = v(k)(q)
-          v(k)(p) = c * vkp - s * vkq
-          v(k)(q) = s * vkp + c * vkq
-        }
-      }
-    }
-    val order = (0 until n).sortBy(i => (-a(i)(i), i))
-    val evals = order.map(i => a(i)(i)).toArray
-    val evecs = Array.tabulate(n, n) { (r, ci) => v(r)(order(ci)) }
-    // sign canonicalization per column
-    for (ci <- 0 until n) {
-      var best = 0
-      for (r <- 1 until n)
-        if (math.abs(evecs(r)(ci)) > math.abs(evecs(best)(ci))) best = r
-      if (evecs(best)(ci) < 0)
-        for (r <- 0 until n) evecs(r)(ci) = -evecs(r)(ci)
-    }
-    (evals, evecs)
-  }
-
-  /** The parametric-OPQ rotation for `m` subspaces: eigendecompose the
-    * corpus covariance, then allocate principal directions to subspaces
-    * balancing the VARIANCE PRODUCT (Ge et al. §4's eigenvalue-allocation
-    * — greedy largest-eigenvalue-to-emptiest-bucket on the log scale,
-    * optimal for independent Gaussian dims). Returns the (dim x dim)
-    * rotation as ROW-MAJOR flattened doubles on the 1e-6 grid, ready for
-    * [[rotate]]: row i of R is the eigenvector serving output dim i, so
-    * rotated = R·x groups decorrelated, variance-balanced coordinates
-    * into consecutive PQ subspaces.
-    */
-  def opqParametricRotation(embeddings: DataFrame, m: Int, dim: Int)
-      : Array[Double] = {
-    val (_, cov) = meanAndCovariance(embeddings, dim)
-    val (evals, evecs) = jacobiEigSym(cov)
-    val sub = dim / m
-    // greedy balanced allocation: next-largest eigenvalue goes to the
-    // non-full bucket with the smallest log-variance product
-    val buckets = Array.fill(m)(List.empty[Int])
-    val logs = new Array[Double](m)
-    for (i <- 0 until dim) {
-      var best = -1
-      for (b <- 0 until m if buckets(b).size < sub)
-        if (best < 0 || logs(b) < logs(best)) best = b
-      buckets(best) = buckets(best) :+ i
-      logs(best) += math.log(math.max(evals(i), 1e-12))
-    }
-    val perm = buckets.toSeq.flatten
-    val r = new Array[Double](dim * dim)
-    for (out <- 0 until dim; j <- 0 until dim)
-      // row `out` = eigenvector perm(out) (transposed: rotated_i = u_i·x)
-      r(out * dim + j) = math.rint(evecs(j)(perm(out)) * 1e6) / 1e6
-    r
-  }
-
   /** Farthest-point (k-center / max-min) coreset sampling — the greedy
     * 2-approximation for k-center (Gonzalez 1985), the standard
     * diversity-selection primitive for training-data curation: pick a
@@ -1569,31 +1342,11 @@ object Similarity {
     selected.reverse.toDF("sel_order", "vec_id", "dist")
   }
 
-  /** Plain PCA rotation for PREFIX-dimension (Matryoshka-style)
-    * truncation: rows of R are the covariance eigenvectors in
-    * DESCENDING-eigenvalue order, so `rotate(e, pcaRotation(e, d))`
-    * concentrates corpus variance into the leading output dims — the
-    * trained front-end that makes "serve only the first 16/32 dims"
-    * meaningful on embeddings that were never Matryoshka-trained
-    * (measured in MatryoshkaRotationSpec + the BASELINE.md ladder;
-    * [[opqParametricRotation]] is the same machinery with variance
-    * BALANCED across PQ subspaces instead of concentrated).
-    * Row-major flattened on the 1e-6 grid, ready for [[rotate]].
-    */
-  def pcaRotation(embeddings: DataFrame, dim: Int): Array[Double] = {
-    val (_, cov) = meanAndCovariance(embeddings, dim)
-    val (_, evecs) = jacobiEigSym(cov)
-    val r = new Array[Double](dim * dim)
-    for (out <- 0 until dim; j <- 0 until dim)
-      r(out * dim + j) = math.rint(evecs(j)(out) * 1e6) / 1e6
-    r
-  }
-
   /** Variance-DESCENDING dimension order — the axis-aligned member of
     * the trained-rotation family (a permutation is an orthogonal matrix;
     * it concentrates per-axis variance into the prefix without mixing
-    * coordinates). Unlike the dense [[pcaRotation]] its training loop
-    * has an exact SQL twin (per-dim moments on the grid6 lattice), so
+    * coordinates). Unlike a dense PCA rotation its training loop has an
+    * exact SQL twin (per-dim moments on the grid6 lattice), so
     * the declared prefix-recall query can be oracle-gated end to end.
     * Returns the 0-based dimension indices, best first. Determinism:
     * both raw moments land on the grid6 lattice (absorbing partial-sum
@@ -1616,21 +1369,6 @@ object Similarity {
     def g6(v: Double): Double = math.floor(v * 1000000.0 + 0.5) / 1000000.0
     val variance = Array.tabulate(dim)(i => g6(m2(i) - m1(i) * m1(i)))
     (0 until dim).sortBy(i => (-variance(i), i)).toArray
-  }
-
-  /** Apply a learned rotation to the embedding column: embedding ←
-    * round(R·x, 6) (`array<double>`, drop-in for the PQ trainers/encoders
-    * which accept float or double). The rotation rides the plan as a
-    * FOLDABLE literal through [[graft.functions.MatVecMul]] — map-only,
-    * codegen'd, no join, no broadcast; at 100 TB this is a free pass
-    * fused into whatever scan feeds training or encoding.
-    */
-  def rotate(embeddings: DataFrame, rotation: Array[Double],
-             vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(embeddings.sparkSession)
-    embeddings.withColumn(vecCol,
-      transform(call_function("graft_matvec",
-          lit(rotation), col(vecCol)), x => round(x, 6)))
   }
 
   // ---- Radius and metadata-constrained search ------------------------

@@ -106,7 +106,6 @@ object TextAnalysis {
     */
   def trainBpeMerges(df: DataFrame, textCol: String, k: Int): Seq[(String, String)] = {
     graft.functions.GraftFunctions.register(df.sparkSession)
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     var vocab = Par.fanOut(df.select(col(textCol)))
       .select(explode(
         expr(s"regexp_extract_all(lower($textCol), '[a-z0-9]+', 0)")).as("w"))
@@ -114,8 +113,7 @@ object TextAnalysis {
       // split BETWEEN chars only: Spark split keeps trailing empties
       // (limit -1), so the plain (?!^) would append a phantom "" symbol
       .select(col("freq"), split(col("w"), "(?!^)(?!$)").as("syms"))
-      .persist(sl)
-    vocab.count()
+      .transform(Materialize.sharedNow)
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var round = 0
     while (round < k) {
@@ -137,8 +135,8 @@ object TextAnalysis {
         // materializes eagerly and stores the blocks itself — no extra
         // persist); other rounds persist + materialize explicitly
         val next =
-          if ((round + 1) % 8 == 0) reEnc.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-          else { val p = reEnc.persist(sl); p.count(); p }
+          if ((round + 1) % 8 == 0) reEnc.transform(Materialize.writeOnce)
+          else Materialize.sharedNow(reEnc)
         vocab.unpersist()
         vocab = next
         round += 1
@@ -852,7 +850,7 @@ object TextAnalysis {
     */
   def removeFlagged(corpus: DataFrame, flagged: DataFrame,
                     idCol: String): DataFrame = {
-    val f = flagged.select(col("doc_id")).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val f = Materialize.writeOnce(flagged.select(col("doc_id")))
     corpus.join(broadcast(f), corpus(idCol) === f("doc_id"), "left_anti")
   }
 
@@ -870,7 +868,7 @@ object TextAnalysis {
     // on the scale probe (37 s -> 11 s at 50 k docs, 192 s -> 19 s at 100 k).
     val flagged = contaminationReportIndexed(corpus, benchGrams, idCol,
         textCol, n)
-      .select(col("doc_id")).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .select(col("doc_id")).transform(Materialize.writeOnce)
     corpus.join(broadcast(flagged), corpus(idCol) === flagged("doc_id"),
       "left_anti")
   }
@@ -898,7 +896,7 @@ object TextAnalysis {
                          numBits: Int = 0,
                          numHashes: Int = 5): DataFrame = {
     val benchGrams = Dedup.shingleRows(benchmark, idCol, textCol, n)
-      .select(col("s")).distinct().localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .select(col("s")).distinct().transform(Materialize.writeOnce)
     // numBits <= 0 -> auto-size at ~10 bits/key (~1% FP with 5 hashes)
     // from the materialized gram count: an oversized filter is pure
     // constant overhead (its words array rides every task binary), an
@@ -921,7 +919,7 @@ object TextAnalysis {
     val flagged = corpusGrams
       .filter(Bloom.mightContain(f, col("s")))
       .join(broadcast(benchGrams), "s")
-      .select(col("doc_id")).distinct().localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .select(col("doc_id")).distinct().transform(Materialize.writeOnce)
     corpus.join(broadcast(flagged), corpus(idCol) === flagged("doc_id"),
       "left_anti")
   }
@@ -947,31 +945,27 @@ object TextAnalysis {
                          numHashes: Int = 16, bands: Int = 4,
                          threshold: Double = 0.5, k: Int = 3,
                          maxBucketSize: Int = 0): DataFrame = {
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val bC = Dedup.bandIndex(corpus, idCol, numHashes, bands, textCol, k)
-      .persist(sl)
-    bC.count() // serial materialization — see Dedup.lshCandidatePairs
+      .transform(Materialize.sharedNow)
     val bB = Dedup.bandIndex(benchmark, idCol, numHashes, bands, textCol, k)
-      .persist(sl)
-    bB.count()
+      .transform(Materialize.sharedNow)
     val (pC, pB) = Dedup.capBucketsPaired(bC, bB, Seq("band", "sig"),
       maxBucketSize, "fuzzyContamination")
     // candidate-sized; lineage cut releases the band caches afterwards
-    val cand = pC.as("a").join(broadcast(pB.as("b")),
-        col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
-      .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("bench_id"))
-      .distinct().localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    bC.unpersist(); bB.unpersist()
+    val cand = Materialize.withPersisted(bC, bB) {
+      pC.as("a").join(broadcast(pB.as("b")),
+          col("a.band") === col("b.band") && col("a.sig") === col("b.sig"))
+        .select(col("a.doc_id").as("doc_id"), col("b.doc_id").as("bench_id"))
+        .distinct().transform(Materialize.writeOnce)
+    }
 
     // cross-relation Jaccard verification: corpus shingles restricted to
     // candidate docs; benchmark shingles are benchmark-sized (broadcast)
     val needC = corpus.join(cand.select(col("doc_id")).distinct(),
       corpus(idCol) === cand("doc_id"), "left_semi")
-    val shC = Dedup.shingleRows(needC, idCol, textCol, k).persist(sl)
-    shC.count()
+    val shC = Materialize.sharedNow(Dedup.shingleRows(needC, idCol, textCol, k))
     val shB = Dedup.shingleRows(benchmark, idCol, textCol, k)
-      .select(col("doc_id").as("bench_id"), col("s")).persist(sl)
-    shB.count()
+      .select(col("doc_id").as("bench_id"), col("s")).transform(Materialize.sharedNow)
     val szC = shC.groupBy(col("doc_id")).agg(count(lit(1)).as("ca"))
     val szB = shB.groupBy(col("bench_id")).agg(count(lit(1)).as("cb"))
     val inter = cand.join(shC, Seq("doc_id"))
@@ -999,7 +993,7 @@ object TextAnalysis {
                          maxBucketSize: Int = 0): DataFrame = {
     val flagged = fuzzyContamination(corpus, benchmark, idCol, textCol,
         numHashes, bands, threshold, k, maxBucketSize)
-      .select(col("doc_id")).distinct().localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .select(col("doc_id")).distinct().transform(Materialize.writeOnce)
     corpus.join(broadcast(flagged), corpus(idCol) === flagged("doc_id"),
       "left_anti")
   }
@@ -1265,7 +1259,7 @@ object TextAnalysis {
       .withColumn("own", min(col("doc_id")).over(byGram))
       .filter(col("doc_id") =!= col("own"))
       .select(col("doc_id")).distinct()
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Materialize.writeOnce)
     df.join(flagged, df(idCol) === flagged("doc_id"), "left_anti")
   }
 
@@ -1305,7 +1299,7 @@ object TextAnalysis {
       .select(col("doc_id"))
     // eager lineage cut before the anti-join — see [[substringDedup]]
     val flagged = inBatch.unionByName(vsIndex).distinct()
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Materialize.writeOnce)
     batch.join(flagged, batch(idCol) === flagged("doc_id"), "left_anti")
   }
 
@@ -1338,7 +1332,7 @@ object TextAnalysis {
         least(col("batch_own"), coalesce(col("idx_own"), col("batch_own"))))
       .filter(col("gown") < col("doc_id"))
       .select(col("doc_id")).distinct()
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Materialize.writeOnce)
     batch.join(flagged, batch(idCol) === flagged("doc_id"), "left_anti")
   }
 

@@ -57,14 +57,17 @@ object Breweries {
     * F1 null-key split -> P1 cast -> P2 locations -> P3 recode -> P4 url ->
     * P6 metadata. Returns (silver, quarantine). One lazy plan each —
     * Catalyst fuses the whole chain into a single codegen stage per sink.
+    * `types` is the P3 recode vocabulary: the fixture's [[CanonicalTypes]]
+    * by default, [[Cleaning.StandardBreweryTypes]] for a real source.
     */
-  def silverSplit(bronzeDf: DataFrame): (DataFrame, DataFrame) = {
+  def silverSplit(bronzeDf: DataFrame,
+                  types: Set[String] = CanonicalTypes): (DataFrame, DataFrame) = {
     Quality.requireColumns(bronzeDf, KeyFields)
     val (valid, quarantine) = Quality.nullKeySplit(bronzeDf, KeyFields)
     val cleaned = {
       val p1 = Cleaning.castStrings(valid, KeyFields)
       val p2 = Cleaning.standardizeLocations(p1)
-      val p3 = Cleaning.recodeType(p2, "brewery_type", CanonicalTypes)
+      val p3 = Cleaning.recodeType(p2, "brewery_type", types)
       val p4 = Cleaning.normalizeUrl(p3, "website_url")
       Cleaning.withProcessingMetadata(p4, processedAtIso = "2026-01-01T00:00:00")
     }

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.metrics.EtlMetrics
-import graft.ops.{Aggregations, Cleaning, Quality}
+import graft.ops.{Aggregations, Cleaning, Materialize, Quality}
 import graft.sources.{BrewerySource, Extractor, IteratorBrewerySource}
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -93,8 +93,8 @@ object Pipeline {
     val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new HPath(path))) return 0L
     val purge = org.apache.spark.sql.functions.broadcast(
-      ids.toDF("__purge_id").distinct().localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    val before = spark.read.parquet(path).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      ids.toDF("__purge_id").distinct().transform(Materialize.writeOnce))
+    val before = Materialize.writeOnce(spark.read.parquet(path))
     val keep = idCols.foldLeft(before) { (d, c) =>
       d.join(purge, d(c) === org.apache.spark.sql.functions.col("__purge_id"), "left_anti")
     }
@@ -252,7 +252,7 @@ object Pipeline {
         } else up
       // materialize BEFORE the swap: the merged plan reads the very
       // files the overwrite replaces
-      atomicOverwrite(spark, merged.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER), pdir)
+      atomicOverwrite(spark, merged.transform(Materialize.writeOnce), pdir)
     }
   }
 
@@ -277,7 +277,7 @@ object Pipeline {
         .withColumn(partitionCol,
           org.apache.spark.sql.functions.lit(pv))
       val kept = cur.filter(!predicate).drop(partitionCol)
-      atomicOverwrite(spark, kept.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER), pdir)
+      atomicOverwrite(spark, kept.transform(Materialize.writeOnce), pdir)
     }
   }
 
@@ -298,14 +298,25 @@ object Pipeline {
       sourceDf.toJSON.toLocalIterator().asScala
     })
     run(spark, source, sourceDf.schema, lay, metrics, perPage, csvGold,
-      runTag, retryDelayMillis = 0)
+      runTag, retryDelayMillis = 0, Breweries.CanonicalTypes)
   }
 
+  /** Full run against a real brewery source: `brewery_type` recodes
+    * against the reference vocabulary [[Cleaning.StandardBreweryTypes]].
+    */
   def run(spark: SparkSession, source: BrewerySource,
           schema: org.apache.spark.sql.types.StructType, lay: Layout,
           metrics: EtlMetrics, perPage: Int,
           csvGold: Boolean, runTag: String,
-          retryDelayMillis: Long): RunResult = {
+          retryDelayMillis: Long): RunResult =
+    run(spark, source, schema, lay, metrics, perPage, csvGold, runTag,
+      retryDelayMillis, Cleaning.StandardBreweryTypes)
+
+  private def run(spark: SparkSession, source: BrewerySource,
+                  schema: org.apache.spark.sql.types.StructType, lay: Layout,
+                  metrics: EtlMetrics, perPage: Int,
+                  csvGold: Boolean, runTag: String,
+                  retryDelayMillis: Long, types: Set[String]): RunResult = {
 
     // Metric discipline under retry: `timed` stays INSIDE the retry so
     // every attempt records its status + duration (the reference's
@@ -351,7 +362,7 @@ object Pipeline {
       graft.metrics.SparkIoMetrics.measure(spark, metrics, "bronze_to_silver") {
       val bronze = spark.read.parquet(lay.bronze)
       Quality.requireColumns(bronze, Breweries.KeyFields)
-      val (cleaned, quarantine) = Breweries.silverSplit(bronze)
+      val (cleaned, quarantine) = Breweries.silverSplit(bronze, types)
       // per-run subdir + atomic overwrite: cross-run APPEND semantics via
       // distinct runTags, but a RETRY of this stage rewrites instead of
       // double-appending

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
 
 /** Session-lifetime build-once memo for index-grade artifacts: derived
   * relations (trained codebooks, code indexes, edge lists, candidate
@@ -17,11 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * key) so concurrent test sessions and different fixture dirs can
   * never cross-feed.
   *
-  * r21 (VERDICT r20 task 3 — the memo was unbounded): checkpoint
-  * blocks are now stored SERIALIZED (`MEMORY_AND_DISK_SER`: compact
-  * byte buffers the old-gen scans cheaply, vs tens of GiB of live
-  * UnsafeRow object graphs that billed multi-second GC pauses to the
-  * dedup queries under the driver's 91 GiB heap), each entry's
+  * r21 (VERDICT r20 task 3 — the memo was unbounded): builds are
+  * [[graft.ops.Materialize.writeOnce]] cuts, each entry's
   * checkpoint RDD ids are tracked, and the memo holds at most
   * `spark.graft.memoBudgetMb` (sysprop, then SPARK_GRAFT_MEMO_BUDGET_MB
   * env; default maxHeap/4) of live block bytes — past the budget the
@@ -94,7 +90,7 @@ object BuildMemo {
     if (hit != null) hit.df
     else {
       val before = persistedIds(s)
-      val built = build.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+      val built = graft.ops.Materialize.writeOnce(build)
       // ids claimed by entries a NESTED df() call inserted during this
       // build belong to those entries, not this one
       val nested = {

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ops.{Corpus, Dedup, Dimensions, EventOps, HeavyHitters, Joins, Multimodal, QualityModel, Similarity, TextAnalysis}
+import graft.ops.{Corpus, Dedup, Dimensions, EventOps, HeavyHitters, Joins, Materialize, Multimodal, QualityModel, Similarity, TextAnalysis}
 import graft.pipeline.{Breweries, Layout, Pipeline}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -864,7 +864,7 @@ object LlmQueries {
     * query set (vec_id % 100 = 7 — disjoint from the % 50 centroid/k-means
     * seeds). The in-sample convention is optimistically biased (every
     * query is its own seed centroid); this is the honest out-of-sample
-    * recall the RecallLadder sweeps tune on.
+    * recall that tuning sweeps are measured on.
     */
   private val IvfPqFullLearnedHoldoutCtes: String =
     ivfPqCtesWith("pcb2", pqLearnedCbDef(2), "cl2", coarseLearnedDef(2),
@@ -1501,7 +1501,7 @@ object LlmQueries {
       val pairs = Dedup.containmentPairsFrom(quoteDocTokens(s, dir),
         quoteAnchorCands(s, dir), threshold = 0.5)
         .filter(col("quote_like") === 1)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(Materialize.shared)
       val drop = pairs.select(
         when(col("cont_a_in_b") > col("cont_b_in_a"), col("doc_a"))
           .when(col("cont_b_in_a") > col("cont_a_in_b"), col("doc_b"))
@@ -1729,8 +1729,7 @@ object LlmQueries {
     // it both sides re-run the tokenize+64-column aggregation.
     "dedup_simhash_incremental" -> ((s, dir) => {
       val sk = Dedup.simhash(Tables.documents(s, dir), "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sk.count()
+        .transform(Materialize.sharedNow)
       Dedup.incrementalSimhashPairs(
         sk.filter(Dedup.hashBucket(col("doc_id")) >= 20),
         sk.filter(Dedup.hashBucket(col("doc_id")) < 20),
@@ -1959,7 +1958,7 @@ object LlmQueries {
           (col("pos") + 1).cast("int").as("dim"), col("v"))),
 
     // IVF-PQ SERVED from the LEARNED sub-codebooks at the rung the r12
-    // RecallLadder sweep picked: nprobe=3 + exact-cosine rerank of the
+    // recall sweep picked: nprobe=3 + exact-cosine rerank of the
     // ADC-50 shortlist (recall@10 0.82 vs 0.50 ADC-only — see ROUND12.md)
     "sim_ivfpq_topk_learned" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
@@ -1996,7 +1995,7 @@ object LlmQueries {
     // set (vec_id % 100 == 7, disjoint from the % 50 centroid seeds) —
     // the honest out-of-sample recall (0.40 at sf0.01; the in-sample
     // 0.78 is biased: every in-sample query is its own seed centroid).
-    // Tuning decisions (RecallLadder, BASELINE.md) are made on this set.
+    // Tuning decisions (BASELINE.md) are made on this set.
     "sim_ivfpq_holdout_recall" -> ((s, dir) => {
       val e = Tables.embeddings(s, dir)
       val ivfCb = kmeans2(s, dir)
@@ -2405,7 +2404,7 @@ object LlmQueries {
       val docs = Tables.documents(s, dir)
       val sk = QualityModel.featureSketchNg(docs, "doc_id", "text",
         when(col("source").isin("src0", "src1", "src2", "src3", "src4"), 1)
-          .otherwise(0), dim = 262144, maxN = 2).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+          .otherwise(0), dim = 262144, maxN = 2).transform(Materialize.writeOnce)
       QualityModel.trainHashedLogRegWith(sk, "doc_id", lr = 0.5, iters = 3)
     }),
 
@@ -2752,7 +2751,7 @@ object LlmQueries {
     "llm_dedup_funnel" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val collapsed = Dedup.exactKeepFirst(docs, "doc_id", "text")
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(Materialize.writeOnce)
       // stage 3 = the guarded release funnel (exact collapse -> capped
       // fuzzy keep-first, 16/4/0.5/cap-64) — the IDENTICAL composition
       // behind [[guardedKeptIds]], so the funnel report rides the same
@@ -2811,7 +2810,7 @@ object LlmQueries {
       val curatedIds = TextAnalysis.curationFilter(kept, "doc_id", "text",
           minTokens = 20, maxTokens = 2000, minQuality = 0.1,
           maxRepetition = 0.2, keepLang = "en")
-        .select(col("doc_id")).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .select(col("doc_id")).transform(Materialize.writeOnce)
       val released = docs.join(curatedIds, Seq("doc_id"), "left_semi")
       Dedup.weightedSampleJoined(released, "doc_id", "source",
         Dedup.temperatureMixRates(released, "source", col("n_chars"),
@@ -3060,7 +3059,7 @@ object LlmQueries {
           .withColumn("c_mktsegment", lit("MOVED2"))
           .withColumn("ts", lit(2000L)))
       val h2 = Dimensions.scd2Apply(h1, ch2, Seq("c_custkey"), "ts")
-        .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // four faces read it; build once
+        .transform(Materialize.writeOnce) // four faces read it; build once
       def face(name: String, df: org.apache.spark.sql.DataFrame) =
         df.groupBy(col("c_mktsegment"))
           .agg(count(lit(1)).as("n"))

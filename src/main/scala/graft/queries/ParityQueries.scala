@@ -17,23 +17,14 @@ object ParityQueries {
     * every invocation; concurrent Verify/Bench/test processes each get
     * their own root — see [[graft.Scratch]]).
     *
-    * r21 (guide §6): prefers tmpfs (/dev/shm) exactly like
-    * `Bench.scratchDir` does for shuffle/spill, and for the same
-    * measured reason — shared-host disk stalls on /tmp billed random
-    * multi-second spikes to the store-writing capstone queries (their
+    * Lives under [[graft.Scratch.parent]], like `Bench.scratchDir`: the
     * sinks are invocation-scoped scratch stores, deleted per run, never
-    * durable outputs). Capacity posture matches the shuffle dir: stores
+    * durable outputs. Capacity posture matches the shuffle dir: stores
     * are per-key-sized, and [[graft.Scratch]] reaps dead processes'
     * roots.
     */
   def scratch(name: String): String =
-    s"${graft.Scratch.dir(scratchParent, "graft_scratch")}/$name"
-
-  private def scratchParent: String = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) "/dev/shm"
-    else sys.props.getOrElse("java.io.tmpdir", "/tmp")
-  }
+    s"${graft.Scratch.dir(graft.Scratch.parent, "graft_scratch")}/$name"
 
   private val invocationSeq = new java.util.concurrent.atomic.AtomicLong()
 

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Materialize
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -51,7 +52,7 @@ object BasketIngest {
     val sizes = b.groupBy(col("basket")).agg(count(lit(1)).as("basket_n"))
     val kept = b.join(sizes.filter(col("basket_n") <= maxBasketSize)
       .select("basket"), Seq("basket"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // feeds supports, pairs AND the basket count
+      .transform(Materialize.writeOnce) // feeds supports, pairs AND the basket count
     kept.groupBy(col("item")).agg(count(lit(1)).as("n"))
       .withColumn("epoch_id", lit(epochId))
       .write.mode("append").parquet(s"$storeDir/supports")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -47,17 +47,18 @@ object ContainmentIngest {
                   idCol: String, textCol: String, threshold: Double,
                   k: Int = 3, maxBucketSize: Int = 0): Unit = {
     val spark = batch.sparkSession
+    // materialize before the index read below can race it
     val recs = batch.select(col(idCol), col(textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    recs.count() // materialize before the index read below can race it
-    val old =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else recs.limit(0)
-    Dedup.containmentIncremental(old, recs, idCol, threshold, textCol,
-        k, maxBucketSize)
-      .write.mode("append").parquet(pairsDir)
-    recs.write.mode("append").parquet(indexDir)
-    recs.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(recs) {
+      val old =
+        if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
+        else recs.limit(0)
+      Dedup.containmentIncremental(old, recs, idCol, threshold, textCol,
+          k, maxBucketSize)
+        .write.mode("append").parquet(pairsDir)
+      recs.write.mode("append").parquet(indexDir)
+    }
   }
 
   /** The accumulated verified pairs, replay-deduped — equal to the

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.{Dedup, Materialize, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -80,7 +80,7 @@ object DeconIngest {
     // both the audit append and the anti-join broadcast (the same
     // eager-flagged discipline as the batch operator)
     val flagged = TextAnalysis.contaminationReportIndexed(
-      batch, benchGrams, idCol, textCol, n).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      batch, benchGrams, idCol, textCol, n).transform(Materialize.writeOnce)
     flagged.write.mode("append").parquet(flaggedDir)
     val flaggedIds = flagged.select(col("doc_id"))
     batch.join(broadcast(flaggedIds),
@@ -135,7 +135,7 @@ object DeconIngest {
     val spark = batch.sparkSession
     val bench = spark.read.parquet(benchIndexDir).dropDuplicates("vec_id")
     val flagged = graft.ops.Similarity.embeddingContaminationReport(
-      batch, bench, threshold).localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      batch, bench, threshold).transform(Materialize.writeOnce)
     flagged.write.mode("append").parquet(flaggedDir)
     val flaggedIds = flagged.select(col("vec_id").as("__flag_id"))
     batch.join(broadcast(flaggedIds),

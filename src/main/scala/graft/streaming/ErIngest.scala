@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.EntityResolution
+import graft.ops.{EntityResolution, Materialize}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -47,24 +47,25 @@ object ErIngest {
                   maxBucketSize: Int = 0): Unit = {
     val spark = batch.sparkSession
     val recs = batch.select(col(idCol), col(strCol))
+    // materialize before the index read below can race it
     val iNew = EntityResolution.indexSegments(recs, idCol, strCol, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    iNew.count() // materialize before the index read below can race it
-    val iOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else iNew.limit(0) // first batch: intra-only
-    val cross = EntityResolution
-      .editDistanceJoinIndexed(iOld, recs, idCol, strCol, d, maxBucketSize)
-      // a REPLAYED record finds its own earlier index rows — the one way
-      // at-least-once delivery could fabricate a pair (id, id, 0); ids
-      // are unique per record, so dropping self-matches is exact
-      .filter(col(idCol) =!= col("index_id"))
-      .select(col(idCol).as("id_a"), col("index_id").as("id_b"), col("dist"))
-    val intra = EntityResolution
-      .editDistanceSelfJoin(recs, idCol, strCol, d, maxBucketSize)
-    cross.unionByName(intra).write.mode("append").parquet(pairsDir)
-    iNew.write.mode("append").parquet(indexDir)
-    iNew.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(iNew) {
+      val iOld =
+        if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
+        else iNew.limit(0) // first batch: intra-only
+      val cross = EntityResolution
+        .editDistanceJoinIndexed(iOld, recs, idCol, strCol, d, maxBucketSize)
+        // a REPLAYED record finds its own earlier index rows — the one way
+        // at-least-once delivery could fabricate a pair (id, id, 0); ids
+        // are unique per record, so dropping self-matches is exact
+        .filter(col(idCol) =!= col("index_id"))
+        .select(col(idCol).as("id_a"), col("index_id").as("id_b"), col("dist"))
+      val intra = EntityResolution
+        .editDistanceSelfJoin(recs, idCol, strCol, d, maxBucketSize)
+      cross.unionByName(intra).write.mode("append").parquet(pairsDir)
+      iNew.write.mode("append").parquet(indexDir)
+    }
   }
 
   /** The accumulated verified pairs, normalized to id_a < id_b and

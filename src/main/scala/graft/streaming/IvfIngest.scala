@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Similarity
+import graft.ops.{Materialize, Similarity}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -54,12 +54,13 @@ object IvfIngest {
     require(Stores.hasParquet(spark, codebookDir),
       s"IvfIngest: no frozen codebook at $codebookDir — call " +
         "freezeCodebook(trainedCentroids, dir) before ingesting")
+    // materialize before the store append below
     val recs = batch.select(col("vec_id"), col("embedding"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    recs.count() // materialize before the store append below
-    Similarity.ivfAssign(recs, spark.read.parquet(codebookDir))
-      .write.mode("append").parquet(indexDir)
-    recs.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(recs) {
+      Similarity.ivfAssign(recs, spark.read.parquet(codebookDir))
+        .write.mode("append").parquet(indexDir)
+    }
   }
 
   /** The accumulated assignment index, replay-deduped — row-identical
@@ -175,7 +176,7 @@ object IvfIngest {
     // before either runs
     val vecs = index(spark, indexDir)
       .select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Materialize.writeOnce)
     val k = spark.read.parquet(codebookDir).count().toInt
     // k seeds spread evenly over the id order: quantile cutpoints at
     // the BUCKET MIDPOINTS (i+0.5)/k from a sketch aggregate, then the
@@ -203,11 +204,9 @@ object IvfIngest {
     // Contract for the residual window: a retrain that did not return
     // true must be RE-RUN TO COMPLETION before serving — serve() against
     // a half-swapped pair probes the wrong cells without a loud signal.
-    val newIndex = Similarity.ivfAssign(vecs, cb).localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val newIndex = Materialize.writeOnce(Similarity.ivfAssign(vecs, cb))
     freezeCodebook(cb, codebookDir)
     graft.pipeline.Pipeline.atomicOverwrite(spark, newIndex, indexDir)
-    vecs.unpersist()
     true
   }
 

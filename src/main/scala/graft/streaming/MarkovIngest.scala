@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Materialize
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,7 +51,7 @@ object MarkovIngest {
   def ingestBatch(batch: DataFrame, storeDir: String, epochId: Long): Unit = {
     val ev = batch.select(col("user_id"), col("event_id"),
         col("event_type"), unix_timestamp(col("ts")).as("tsec"))
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+      .transform(Materialize.writeOnce)
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("tsec"), col("event_id"))
     ev.withColumn("next_type", lead(col("event_type"), 1).over(w))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.{Dedup, Similarity}
+import graft.ops.{Dedup, Materialize, Similarity}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -60,15 +60,15 @@ object NearDupIngest {
                   textCol: String, k: Int, maxBucketSize: Int = 0): Unit = {
     val spark = batch.sparkSession
     val bNew = Dedup.bandIndex(batch, idCol, numHashes, bands, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count() // serial materialization — see Dedup.lshCandidatePairs
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    Dedup.incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize)
-      .write.mode("append").parquet(pairsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(bNew) {
+      val bOld =
+        if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
+        else bNew.limit(0) // first batch: intra-only
+      Dedup.incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize)
+        .write.mode("append").parquet(pairsDir)
+      bNew.write.mode("append").parquet(indexDir)
+    }
   }
 
   /** Right-to-be-forgotten purge across a near-dup deployment's
@@ -161,24 +161,24 @@ object NearDupIngest {
     val spark = batch.sparkSession
     val batchDocs = batch.select(col(idCol), col(textCol))
     val bNew = Dedup.bandIndex(batchDocs, idCol, numHashes, bands, textCol, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count() // serial materialization — see Dedup.lshCandidatePairs
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    val cand = Dedup.incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize)
-    // the verification corpus = stored docs + this batch (not yet written);
-    // jaccardVerify semi-joins it down to candidate members before the
-    // shingle explode, so this union is never scanned in full
-    val store =
-      if (Stores.hasParquet(spark, docsDir))
-        spark.read.parquet(docsDir).unionByName(batchDocs)
-      else batchDocs
-    Dedup.jaccardVerify(store, cand, idCol, k, threshold, textCol)
-      .write.mode("append").parquet(verifiedDir)
-    batchDocs.write.mode("append").parquet(docsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(bNew) {
+      val bOld =
+        if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
+        else bNew.limit(0) // first batch: intra-only
+      val cand = Dedup.incrementalLshCandidatesIndexed(bOld, bNew, maxBucketSize)
+      // the verification corpus = stored docs + this batch (not yet written);
+      // jaccardVerify semi-joins it down to candidate members before the
+      // shingle explode, so this union is never scanned in full
+      val store =
+        if (Stores.hasParquet(spark, docsDir))
+          spark.read.parquet(docsDir).unionByName(batchDocs)
+        else batchDocs
+      Dedup.jaccardVerify(store, cand, idCol, k, threshold, textCol)
+        .write.mode("append").parquet(verifiedDir)
+      batchDocs.write.mode("append").parquet(docsDir)
+      bNew.write.mode("append").parquet(indexDir)
+    }
     spark.catalog.clearCache() // release jaccardVerify's internal persists
   }
 
@@ -207,16 +207,16 @@ object NearDupIngest {
                          maxBucketSize: Int = 0): Unit = {
     val spark = batch.sparkSession
     val bNew = Dedup.simhashBandIndex(Dedup.simhash(batch, idCol, textCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count() // serial materialization — see Dedup.lshCandidatePairs
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    val pairs = Dedup.incrementalSimhashPairsIndexed(bOld, bNew,
-      maxHamming, maxBucketSize)
-    pairs.write.mode("append").parquet(pairsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(bNew) {
+      val bOld =
+        if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
+        else bNew.limit(0) // first batch: intra-only
+      val pairs = Dedup.incrementalSimhashPairsIndexed(bOld, bNew,
+        maxHamming, maxBucketSize)
+      pairs.write.mode("append").parquet(pairsDir)
+      bNew.write.mode("append").parquet(indexDir)
+    }
   }
 
   // ---- Embedding family --------------------------------------------------
@@ -244,16 +244,16 @@ object NearDupIngest {
                            maxBucketSize: Int = 0): Unit = {
     val spark = batch.sparkSession
     val bNew = Similarity.srpIndex(batch, planes, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count()
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    val pairs = Similarity.incrementalSrpNearDupIndexed(bOld, bNew,
-      threshold, maxBucketSize)
-    pairs.write.mode("append").parquet(pairsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(bNew) {
+      val bOld =
+        if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
+        else bNew.limit(0) // first batch: intra-only
+      val pairs = Similarity.incrementalSrpNearDupIndexed(bOld, bNew,
+        threshold, maxBucketSize)
+      pairs.write.mode("append").parquet(pairsDir)
+      bNew.write.mode("append").parquet(indexDir)
+    }
   }
 
   // ---- Semantic (SemDeDup) family ------------------------------------
@@ -290,15 +290,15 @@ object NearDupIngest {
                           maxBucketSize: Int = 0): Unit = {
     val spark = batch.sparkSession
     val bNew = Similarity.semanticIndex(batch, codebook)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bNew.count()
-    val bOld =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else bNew.limit(0) // first batch: intra-only
-    val pairs = Similarity.incrementalSrpNearDupIndexed(bOld, bNew,
-      threshold, maxBucketSize)
-    pairs.write.mode("append").parquet(pairsDir)
-    bNew.write.mode("append").parquet(indexDir)
-    bNew.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(bNew) {
+      val bOld =
+        if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
+        else bNew.limit(0) // first batch: intra-only
+      val pairs = Similarity.incrementalSrpNearDupIndexed(bOld, bNew,
+        threshold, maxBucketSize)
+      pairs.write.mode("append").parquet(pairsDir)
+      bNew.write.mode("append").parquet(indexDir)
+    }
   }
 }

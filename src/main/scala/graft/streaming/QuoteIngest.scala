@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -59,45 +59,43 @@ object QuoteIngest {
                   nAnchors: Int, threshold: Double, k: Int = 3,
                   maxBucketSize: Int = 0): Unit = {
     val spark = batch.sparkSession
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // materialize before the store reads below can race it
     val recs = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-      .persist(sl)
-    recs.count() // materialize before the store reads below can race it
+      .transform(Materialize.sharedNow)
     val newAnchors = Dedup.docAnchors(recs, "doc_id", nAnchors, "text", k)
-      .persist(sl)
-    newAnchors.count()
-    // replay-dedup the store read (ADVICE r17): under at-least-once
-    // replay the anchor store holds duplicate (ah, doc_id) rows, which
-    // would inflate capBucketsPaired's bucket counts — a bucket
-    // genuinely under maxBucketSize could be dropped after a replay,
-    // silently losing pairs relative to the documented batch parity.
-    val oldAnchors =
-      (if (Stores.hasParquet(spark, anchorDir)) spark.read.parquet(anchorDir)
-       else newAnchors.limit(0)).dropDuplicates("ah", "doc_id")
-    val (nA, oA) = Dedup.capBucketsPaired(newAnchors, oldAnchors,
-      Seq("ah"), maxBucketSize, "QuoteIngest")
-    val cross = nA.select(col("ah"), col("doc_id").as("na"))
-      .join(oA.select(col("ah"), col("doc_id").as("nb")), Seq("ah"))
-    val self = nA.select(col("ah"), col("doc_id").as("na"))
-      .join(nA.select(col("ah"), col("doc_id").as("nb")), Seq("ah"))
-      .filter(col("na") < col("nb"))
-    val cand = cross.unionByName(self)
-      .select(least(col("na"), col("nb")).as("doc_a"),
-        greatest(col("na"), col("nb")).as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .distinct()
-    val oldDocs =
-      if (Stores.hasParquet(spark, docsDir)) spark.read.parquet(docsDir)
-      else recs.limit(0)
-    // one text per id even under replay — duplicate rows would inflate
-    // nothing (shingle sets are per-id distinct) but cost double work
-    val allDocs = oldDocs.unionByName(recs).dropDuplicates("doc_id")
-    Dedup.containmentPairs(allDocs, cand, "doc_id", k, threshold, "text")
-      .write.mode("append").parquet(pairsDir)
-    newAnchors.write.mode("append").parquet(anchorDir)
-    recs.write.mode("append").parquet(docsDir)
-    newAnchors.unpersist()
-    recs.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(newAnchors, recs) {
+      // replay-dedup the store read (ADVICE r17): under at-least-once
+      // replay the anchor store holds duplicate (ah, doc_id) rows, which
+      // would inflate capBucketsPaired's bucket counts — a bucket
+      // genuinely under maxBucketSize could be dropped after a replay,
+      // silently losing pairs relative to the documented batch parity.
+      val oldAnchors =
+        (if (Stores.hasParquet(spark, anchorDir)) spark.read.parquet(anchorDir)
+         else newAnchors.limit(0)).dropDuplicates("ah", "doc_id")
+      val (nA, oA) = Dedup.capBucketsPaired(newAnchors, oldAnchors,
+        Seq("ah"), maxBucketSize, "QuoteIngest")
+      val cross = nA.select(col("ah"), col("doc_id").as("na"))
+        .join(oA.select(col("ah"), col("doc_id").as("nb")), Seq("ah"))
+      val self = nA.select(col("ah"), col("doc_id").as("na"))
+        .join(nA.select(col("ah"), col("doc_id").as("nb")), Seq("ah"))
+        .filter(col("na") < col("nb"))
+      val cand = cross.unionByName(self)
+        .select(least(col("na"), col("nb")).as("doc_a"),
+          greatest(col("na"), col("nb")).as("doc_b"))
+        .filter(col("doc_a") =!= col("doc_b"))
+        .distinct()
+      val oldDocs =
+        if (Stores.hasParquet(spark, docsDir)) spark.read.parquet(docsDir)
+        else recs.limit(0)
+      // one text per id even under replay — duplicate rows would inflate
+      // nothing (shingle sets are per-id distinct) but cost double work
+      val allDocs = oldDocs.unionByName(recs).dropDuplicates("doc_id")
+      Dedup.containmentPairs(allDocs, cand, "doc_id", k, threshold, "text")
+        .write.mode("append").parquet(pairsDir)
+      newAnchors.write.mode("append").parquet(anchorDir)
+      recs.write.mode("append").parquet(docsDir)
+    }
   }
 
   /** The accumulated verified containment pairs, replay-deduped —

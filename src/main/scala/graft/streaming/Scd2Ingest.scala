@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Dimensions
+import graft.ops.{Dimensions, Materialize}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -47,7 +47,7 @@ object Scd2Ingest {
     val next = Dimensions.scd2ApplyIdempotent(history, batch, keyCols, tsCol)
     // materialize BEFORE the swap: the plan reads the files it replaces
     graft.pipeline.Pipeline.atomicOverwrite(spark,
-      next.localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER), historyDir)
+      next.transform(Materialize.writeOnce), historyDir)
   }
 
   def history(spark: SparkSession, historyDir: String): DataFrame =

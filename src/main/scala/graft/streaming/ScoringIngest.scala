@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.QualityModel
+import graft.ops.{Materialize, QualityModel}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -50,15 +50,16 @@ object ScoringIngest {
                   epoch: Long = 0L): Unit = {
     val spark = batch.sparkSession
     val w = spark.read.parquet(weightsDir)
+    // one materialization for the two sinks
     val scored = QualityModel.scoreHashedLogReg(batch, idCol, textCol, w, dim)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    scored.count() // one materialization for the two sinks
-    scored.withColumn("epoch_id", lit(epoch))
-      .write.mode("append").parquet(scoresDir)
-    batch.join(scored.filter(col("score") >= minScore).select(col(idCol)),
-        Seq(idCol), "left_semi")
-      .write.mode("append").parquet(keptDir)
-    scored.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(scored) {
+      scored.withColumn("epoch_id", lit(epoch))
+        .write.mode("append").parquet(scoresDir)
+      batch.join(scored.filter(col("score") >= minScore).select(col(idCol)),
+          Seq(idCol), "left_semi")
+        .write.mode("append").parquet(keptDir)
+    }
   }
 
   /** Per-doc score relation, replay-deduped the way [[compact]]
@@ -114,8 +115,7 @@ object ScoringIngest {
       // snapshot the surviving rows BEFORE the swap invalidates the
       // files the plan reads
       val surviving = dedupScores(spark.read.parquet(scoresDir), idCol)
-        .localCheckpoint(true,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+        .transform(Materialize.writeOnce)
       graft.pipeline.Pipeline.atomicOverwrite(spark, surviving, scoresDir)
       if (Stores.hasParquet(spark, keptDir)) {
         val kept = spark.read.parquet(keptDir).dropDuplicates(idCol)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Materialize
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,11 +61,10 @@ object SeqPatternIngest {
                   supp2Dir: String, supp3Dir: String,
                   maxGapSeconds: Long): Unit = {
     val spark = batch.sparkSession
-    val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    // materialize before the store reads below can race it
     val ev = batch.select(col("user_id"), col("event_type"),
       col("tsec").cast("long").as("tsec"),
-      col("event_id").cast("long").as("event_id")).persist(sl)
-    ev.count() // materialize before the store reads below can race it
+      col("event_id").cast("long").as("event_id")).transform(Materialize.sharedNow)
     val o = struct(col("tsec"), col("event_id"))
 
     // ---- pass 1: (A, B) with gap <= g ---------------------------------
@@ -117,64 +117,63 @@ object SeqPatternIngest {
         col("qts") - col("__last") <= maxGapSeconds)
       .select(col("user_id"), col("type_a"), col("type_b"), col("o"),
         col("qts"))
-      .persist(sl)
-    valid2New.count()
-    valid2New.select(col("user_id"), col("type_a"), col("type_b"))
-      .distinct()
-      .write.mode("append").parquet(supp2Dir)
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(valid2New, ev) {
+      valid2New.select(col("user_id"), col("type_a"), col("type_b"))
+        .distinct()
+        .write.mode("append").parquet(supp2Dir)
 
-    // ---- pass 2: (A, B, C) with both gaps <= g ------------------------
-    val oldV2 = readMax(spark, valid2Dir,
-      Seq("user_id", "type_a", "type_b"), ev
-        .select(col("user_id"), col("event_type").as("type_a"),
-          col("event_type").as("type_b"), col("tsec").as("mts"),
-          col("event_id").as("mid")).limit(0))
-    val pairsAlpha = oldV2.select(col("type_a"), col("type_b"))
-      .unionByName(valid2New.select(col("type_a"), col("type_b")))
-      .distinct()
-    val m2Store = oldV2.select(col("user_id"), col("type_a"),
-      col("type_b"),
-      struct(col("mts").as("tsec"), col("mid").as("event_id")).as("o"),
-      col("mts"), lit(1).as("is_m"),
-      lit(null).cast("string").as("type_c"),
-      lit(null).cast("long").as("qts"))
-    val m2Batch = valid2New.select(col("user_id"), col("type_a"),
-      col("type_b"), col("o"), col("qts").as("mts"), lit(1).as("is_m"),
-      lit(null).cast("string").as("type_c"),
-      lit(null).cast("long").as("qts"))
-    val queries2 = ev.select(col("user_id"),
-        col("event_type").as("type_c"), o.as("o"), col("tsec").as("qts"))
-      .crossJoin(broadcast(pairsAlpha))
-      .select(col("user_id"), col("type_a"), col("type_b"), col("o"),
-        lit(null).cast("long").as("mts"), lit(0).as("is_m"),
-        col("type_c"), col("qts"))
-    val w2 = Window.partitionBy(col("user_id"), col("type_a"),
-        col("type_b"))
-      .orderBy(col("o"), col("is_m"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    m2Store.unionByName(m2Batch).unionByName(queries2)
-      .withColumn("__last",
-        max(when(col("is_m") === 1, col("mts"))).over(w2))
-      .filter(col("is_m") === 0 && col("__last").isNotNull &&
-        col("qts") - col("__last") <= maxGapSeconds)
-      .select(col("user_id"), col("type_a"), col("type_b"),
-        col("type_c"))
-      .distinct()
-      .write.mode("append").parquet(supp3Dir)
+      // ---- pass 2: (A, B, C) with both gaps <= g ------------------------
+      val oldV2 = readMax(spark, valid2Dir,
+        Seq("user_id", "type_a", "type_b"), ev
+          .select(col("user_id"), col("event_type").as("type_a"),
+            col("event_type").as("type_b"), col("tsec").as("mts"),
+            col("event_id").as("mid")).limit(0))
+      val pairsAlpha = oldV2.select(col("type_a"), col("type_b"))
+        .unionByName(valid2New.select(col("type_a"), col("type_b")))
+        .distinct()
+      val m2Store = oldV2.select(col("user_id"), col("type_a"),
+        col("type_b"),
+        struct(col("mts").as("tsec"), col("mid").as("event_id")).as("o"),
+        col("mts"), lit(1).as("is_m"),
+        lit(null).cast("string").as("type_c"),
+        lit(null).cast("long").as("qts"))
+      val m2Batch = valid2New.select(col("user_id"), col("type_a"),
+        col("type_b"), col("o"), col("qts").as("mts"), lit(1).as("is_m"),
+        lit(null).cast("string").as("type_c"),
+        lit(null).cast("long").as("qts"))
+      val queries2 = ev.select(col("user_id"),
+          col("event_type").as("type_c"), o.as("o"), col("tsec").as("qts"))
+        .crossJoin(broadcast(pairsAlpha))
+        .select(col("user_id"), col("type_a"), col("type_b"), col("o"),
+          lit(null).cast("long").as("mts"), lit(0).as("is_m"),
+          col("type_c"), col("qts"))
+      val w2 = Window.partitionBy(col("user_id"), col("type_a"),
+          col("type_b"))
+        .orderBy(col("o"), col("is_m"))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      m2Store.unionByName(m2Batch).unionByName(queries2)
+        .withColumn("__last",
+          max(when(col("is_m") === 1, col("mts"))).over(w2))
+        .filter(col("is_m") === 0 && col("__last").isNotNull &&
+          col("qts") - col("__last") <= maxGapSeconds)
+        .select(col("user_id"), col("type_a"), col("type_b"),
+          col("type_c"))
+        .distinct()
+        .write.mode("append").parquet(supp3Dir)
 
-    // ---- advance the summaries (per-key maxima; replay-idempotent) ----
-    ev.groupBy(col("user_id"), col("event_type").as("type_a"))
-      .agg(max(o).as("m"))
-      .select(col("user_id"), col("type_a"), col("m.tsec").as("mts"),
-        col("m.event_id").as("mid"))
-      .write.mode("append").parquet(lastDir)
-    valid2New.groupBy(col("user_id"), col("type_a"), col("type_b"))
-      .agg(max(col("o")).as("m"))
-      .select(col("user_id"), col("type_a"), col("type_b"),
-        col("m.tsec").as("mts"), col("m.event_id").as("mid"))
-      .write.mode("append").parquet(valid2Dir)
-    valid2New.unpersist()
-    ev.unpersist()
+      // ---- advance the summaries (per-key maxima; replay-idempotent) ----
+      ev.groupBy(col("user_id"), col("event_type").as("type_a"))
+        .agg(max(o).as("m"))
+        .select(col("user_id"), col("type_a"), col("m.tsec").as("mts"),
+          col("m.event_id").as("mid"))
+        .write.mode("append").parquet(lastDir)
+      valid2New.groupBy(col("user_id"), col("type_a"), col("type_b"))
+        .agg(max(col("o")).as("m"))
+        .select(col("user_id"), col("type_a"), col("type_b"),
+          col("m.tsec").as("mts"), col("m.event_id").as("mid"))
+        .write.mode("append").parquet(valid2Dir)
+    }
   }
 
   /** Accumulated supported (user, A, B) rows, replay-deduped — equal to

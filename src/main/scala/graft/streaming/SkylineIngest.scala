@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Aggregations
+import graft.ops.{Aggregations, Materialize}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -43,7 +43,7 @@ object SkylineIngest {
       else recs.limit(0)
     val next = Aggregations.skyline2D(
         old.unionByName(recs).dropDuplicates(idCol), xCol, yCol)
-      .localCheckpoint(true, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER) // cut lineage before the swap overwrites the input
+      .transform(Materialize.writeOnce) // cut lineage before the swap overwrites the input
     graft.pipeline.Pipeline.atomicOverwrite(spark, next, frontierDir)
   }
 

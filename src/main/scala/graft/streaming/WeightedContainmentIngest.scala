@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Materialize}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -42,18 +42,19 @@ object WeightedContainmentIngest {
     val spark = batch.sparkSession
     // store schema normalized to (doc_id, text) — the QuoteIngest
     // convention, so purge's doc_id key matches ANY caller idCol
+    // materialize before the index read below can race it
     val recs = batch.select(col(idCol).as("doc_id"),
         col(textCol).as("text"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    recs.count() // materialize before the index read below can race it
-    val old =
-      if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
-      else recs.limit(0)
-    Dedup.weightedContainmentIncremental(old, recs, "doc_id", threshold,
-        "text", k, maxBucketSize)
-      .write.mode("append").parquet(pairsDir)
-    recs.write.mode("append").parquet(indexDir)
-    recs.unpersist()
+      .transform(Materialize.sharedNow)
+    Materialize.withPersisted(recs) {
+      val old =
+        if (Stores.hasParquet(spark, indexDir)) spark.read.parquet(indexDir)
+        else recs.limit(0)
+      Dedup.weightedContainmentIncremental(old, recs, "doc_id", threshold,
+          "text", k, maxBucketSize)
+        .write.mode("append").parquet(pairsDir)
+      recs.write.mode("append").parquet(indexDir)
+    }
   }
 
   /** The accumulated verified pairs, replay-deduped — equal to the

@@ -515,67 +515,6 @@ class SimilaritySpec extends SparkSpec {
     assert(clean == Set(2L))
   }
 
-  // ---- OPQ rotation -------------------------------------------------
-
-  test("jacobiEigSym: recovers a known spectrum, descending, sign-fixed") {
-    // diag(3,1) rotated by 45 degrees: eigenvalues {3, 1}, eigenvectors
-    // (1,1)/sqrt2 and (-1,1)/sqrt2
-    val s2 = math.sqrt(2) / 2
-    val a = Array(Array(2.0, 1.0), Array(1.0, 2.0))
-    val (ev, u) = Similarity.jacobiEigSym(a)
-    assert(math.abs(ev(0) - 3.0) < 1e-12 && math.abs(ev(1) - 1.0) < 1e-12)
-    assert(math.abs(math.abs(u(0)(0)) - s2) < 1e-12)
-    // sign canonicalization: largest-|.| component positive
-    assert(u(0)(0) > 0 && u(1)(0) > 0)
-    // columns orthonormal
-    val dot = u(0)(0) * u(0)(1) + u(1)(0) * u(1)(1)
-    assert(math.abs(dot) < 1e-12)
-  }
-
-  test("meanAndCovariance: matches the closed form on a tiny relation") {
-    val df = Seq(
-      (1L, Seq(1.0f, 0.0f)), (2L, Seq(3.0f, 2.0f)), (3L, Seq(2.0f, 4.0f)))
-      .toDF("vec_id", "embedding")
-    val (mu, cov) = Similarity.meanAndCovariance(df, 2)
-    assert(mu.toSeq == Seq(2.0, 2.0))
-    // E[x0^2]-mu0^2 = (1+9+4)/3 - 4 = 2/3; cross = (0+6+8)/3 - 4 = 2/3
-    // var(x1) = (0+4+16)/3 - 4 = 8/3 — all on the 1e-6 grid
-    assert(math.abs(cov(0)(0) - 0.666667) < 1e-6)
-    assert(math.abs(cov(0)(1) - 0.666667) < 1e-6)
-    assert(math.abs(cov(1)(1) - 2.666667) < 1e-6)
-  }
-
-  test("opq rotation: orthonormal rows, dot products preserved by rotate") {
-    val e = Tables.embeddings(spark, sf0001)
-    val rot = Similarity.opqParametricRotation(e, m = 8, dim = 64)
-    assert(rot.length == 64 * 64)
-    // rows orthonormal (up to the 1e-6 storage grid x 64 dims)
-    for (i <- Seq(0, 7, 63); j <- Seq(0, 31)) {
-      val d = (0 until 64).map(k => rot(i * 64 + k) * rot(j * 64 + k)).sum
-      val want = if (i == j) 1.0 else 0.0
-      assert(math.abs(d - want) < 1e-3, s"row $i . row $j = $d")
-    }
-    // rotation preserves pairwise cosines (orthogonality end-to-end
-    // through the graft_matvec expression), up to the 1e-6 element round
-    def pairCos(d: org.apache.spark.sql.DataFrame): Map[(Long, Long), Double] = {
-      val a = d.select(col("vec_id").as("ia"), col("embedding").as("ea"))
-      val b = d.select(col("vec_id").as("ib"), col("embedding").as("eb"))
-      a.join(b, col("ia") < col("ib"))
-        .select(col("ia"), col("ib"),
-          Similarity.cosine(col("ea"), col("eb")).as("c"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-        .toMap
-    }
-    val pre = e.filter(col("vec_id") < 4).select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true)
-    val cPre = pairCos(pre)
-    val cPost = pairCos(Similarity.rotate(pre, rot))
-    assert(cPre.keySet == cPost.keySet && cPre.nonEmpty)
-    cPre.foreach { case (k, v) =>
-      assert(math.abs(v - cPost(k)) < 1e-3, s"pair $k: $v vs ${cPost(k)}")
-    }
-  }
-
   test("recallAtK: identical, disjoint, and partial lists") {
     def topk(rows: (Long, Long)*) = rows.toSeq.toDF("query_id", "vec_id")
     val exact = topk((1L, 10L), (1L, 11L), (2L, 20L), (2L, 21L))
@@ -658,30 +597,5 @@ class SimilaritySpec extends SparkSpec {
     assert(served.forall(t => okIds.contains(t._2)))
     val recall = (exact & served).size.toDouble / exact.size
     assert(recall >= 0.4, s"filtered IVF recall $recall too low")
-  }
-
-  test("binary cascade with corpus-wide tiers degenerates to exact brute force") {
-    // hammingList = shortlist = corpus size keeps every candidate through
-    // both approximate tiers, so the exact-cosine rerank must reproduce
-    // bruteForceTopK — pins the cascade's stage plumbing (hamming keep,
-    // candidate-restricted ADC, rerank ids) end to end
-    val e = Tables.embeddings(spark, sf0001)
-    val n = e.count().toInt
-    val cb = e.filter(col("vec_id") % 50 === 0).select("vec_id", "embedding")
-    val res = Similarity.ivfResiduals(e, cb)
-    val pqCbRes = Similarity.pqCodebookLearnedFrom(res,
-      Similarity.pqCodebookFixed(res, m = 8, dim = 64, k = 16),
-      m = 8, dim = 64, maxIters = 1)
-    val idx = Similarity.ivfPqResidualIndex(e, cb, pqCbRes, m = 8, dim = 64)
-    val bin = Similarity.quantizeBinary(e)
-      .select(col("vec_id"), col("b1"), col("b2"))
-    val pred = col("vec_id") % 100 === 0
-    val cascade = Similarity.ivfPqResidualTopKBinaryCascade(idx, cb,
-        pqCbRes, e.filter(pred), e, bin, m = 8, dim = 64,
-        hammingList = n, shortlist = n, k = 10)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val exact = Similarity.bruteForceTopK(e, pred, k = 10)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    assert(cascade == exact)
   }
 }

@@ -39,6 +39,32 @@ class PipelineSpec extends SparkSpec {
       Map("operation" -> "bronze_to_silver_input")) > 0)
   }
 
+  test("a real source recodes brewery_type against the reference vocabulary") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val fields = Seq("id", "name", "brewery_type", "city", "state", "country",
+      "website_url")
+    def row(id: Int, tpe: Option[String]): String = {
+      val t = tpe.map(v => "\"" + v + "\"").getOrElse("null")
+      s"""{"id":"$id","name":"b$id","brewery_type":$t,"city":"Austin",""" +
+        s""""state":"Texas","country":"United States","website_url":null}"""
+    }
+    val source = new graft.sources.FixtureBrewerySource(Seq(
+      row(1, Some("MICRO")), row(2, Some(" brewpub ")), row(3, Some("taproom")),
+      row(4, None)))
+    val out = Files.createTempDirectory("graft_pipe_").toString
+    val res = Pipeline.run(spark, source,
+      StructType(fields.map(StructField(_, StringType))), Pipeline.Layout(out),
+      EtlMetrics.quiet(), perPage = 200, csvGold = false, runTag = "src",
+      retryDelayMillis = 0)
+    assert(res.bronzeRows == 4 && res.silverRows == 3 && res.quarantineRows == 1)
+    val types = spark.read.parquet(s"$out/gold/by_type_location")
+      .select("brewery_type").collect().map(_.getString(0)).toSet
+    assert(types == Set("micro", "brewpub", "other"))
+    val quarantined = spark.read.parquet(s"$out/quarantine")
+      .select("id").collect().map(_.getString(0)).toSeq
+    assert(quarantined == Seq("4"))
+  }
+
   test("csvGold flag writes header'd CSV alongside the parquet gold") {
     val out = Files.createTempDirectory("graft_pipe_").toString
     Pipeline.run(spark, sf0001, out, csvGold = true)
